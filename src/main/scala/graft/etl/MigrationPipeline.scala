@@ -228,8 +228,15 @@ object MigrationPipeline {
           JdbcConnector.write(
             df, url, table, SaveMode.Overwrite, props = typeProps)
           // verify the TARGET (like the parquet branch) — counting the
-          // source would mask a write that dropped rows
-          JdbcConnector.read(spark, url, table, props = sinkProps).count()
+          // source would mask a write that dropped rows; one server-side
+          // COUNT(*) on a credentialed connection, not a Spark read job
+          val conn = JdbcConnector.connect(url, sinkProps)
+          try {
+            val rs = conn.createStatement()
+              .executeQuery(s"SELECT COUNT(*) FROM $table")
+            rs.next()
+            rs.getLong(1)
+          } finally conn.close()
       }
       spec.name -> n
     }.toMap

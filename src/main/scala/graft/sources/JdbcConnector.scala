@@ -6,10 +6,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * jdbc_source/jdbc_sink; the Access→PostgreSQL bulk-load half of the
   * migration).
   *
-  * Thin and config-gated: no database is reachable in this offline
-  * harness (SURVEY §7 risk 8), so the module is exercised by
-  * JdbcConnectorSpec only when SPARK_GRAFT_JDBC_URL is set; the option
-  * plumbing below is the entire integration surface.
+  * Thin: the option plumbing below is the entire integration
+  * surface. Embedded Derby drives it in the suite (JdbcConnectorSpec,
+  * JdbcUpsertSpec, MigrationPipelineSpec, JetMdbConstraintsSpec); a
+  * live PostgreSQL is exercised only when GRAFT_PG_URL or
+  * SPARK_GRAFT_JDBC_URL is set.
   *
   * Scale notes (the knobs that matter on a 1000-executor cluster):
   *   - reads MUST be partitioned (`partitionColumn` + bounds +

@@ -1,6 +1,6 @@
 package graft.sources.jetmdb
 
-import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path, PositionedReadable, Seekable}
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileSystem, Path}
 
 /** Jet "database encryption" (r14): the public RC4 page-scramble
   * profile the whole mdb tooling ecosystem documents.
@@ -91,9 +91,9 @@ object JetCrypt {
 
   /** Open `path` for page reads: a plain stream when `dbKey` is 0, a
     * decrypting wrapper otherwise. The wrapper only serves the
-    * page-aligned `readFully(pos, buf)` shape `JetMdbSource.readPage`
-    * uses — anything else fails loudly rather than returning bytes
-    * of ambiguous cleartext state. */
+    * page-aligned `seek` + whole-page `readFully(buf)` shape
+    * `JetMdbSource.readPage` uses — anything else fails loudly rather
+    * than returning bytes of ambiguous cleartext state. */
   def open(h: FileSystem, path: String, dbKey: Int,
       pageSize: Int): FSDataInputStream = {
     val under = h.open(new Path(path))
@@ -105,39 +105,34 @@ object JetCrypt {
 
 /** Page-aligned decrypting view over an open database stream: page 0
   * passes through (the header is never page-encrypted), every other
-  * page is RC4'd with `dbKey XOR pageNumber`. */
+  * page is RC4'd with `dbKey XOR pageNumber`, the page number taken
+  * from the stream position. Reads go through the one underlying
+  * stream, so a checksummed FS keeps verifying every chunk. */
 private[jetmdb] final class Rc4PageStream(
     under: FSDataInputStream, dbKey: Int, pageSize: Int)
-  extends java.io.InputStream with Seekable with PositionedReadable {
+  extends FSInputStream {
 
-  override def readFully(position: Long, buffer: Array[Byte],
-      offset: Int, length: Int): Unit = {
-    require(position % pageSize == 0 && length == pageSize &&
-      offset == 0,
-      s"jetmdb: encrypted read must be page-aligned (pos=$position " +
+  override def read(buffer: Array[Byte], offset: Int,
+      length: Int): Int = {
+    val position = under.getPos
+    require(position % pageSize == 0 && length == pageSize,
+      s"jetmdb: encrypted read must be one whole page (pos=$position " +
         s"len=$length pageSize=$pageSize)")
-    under.readFully(position, buffer, offset, length)
+    under.readFully(buffer, offset, length)
     val page = (position / pageSize).toInt
     if (page != 0)
       JetCrypt.rc4(JetCrypt.pageKey(dbKey, page), buffer, offset, length)
-  }
-
-  override def readFully(position: Long,
-      buffer: Array[Byte]): Unit =
-    readFully(position, buffer, 0, buffer.length)
-
-  override def read(position: Long, buffer: Array[Byte], offset: Int,
-      length: Int): Int = {
-    readFully(position, buffer, offset, length)
     length
   }
 
-  // sequential-stream surface: unused by the page reader; loud
   override def read(): Int = throw new UnsupportedOperationException(
-    "jetmdb: encrypted stream serves positioned page reads only")
-  override def seek(pos: Long): Unit =
-    throw new UnsupportedOperationException(
-      "jetmdb: encrypted stream serves positioned page reads only")
+    "jetmdb: encrypted stream serves whole-page reads only")
+  override def seek(pos: Long): Unit = {
+    require(pos % pageSize == 0,
+      s"jetmdb: encrypted seek must be page-aligned (pos=$pos " +
+        s"pageSize=$pageSize)")
+    under.seek(pos)
+  }
   override def getPos: Long = under.getPos
   override def seekToNewSource(targetPos: Long): Boolean = false
   override def close(): Unit = under.close()

@@ -37,7 +37,8 @@ import graft.sources.jetmdb.JetMdbFormat._
   * unit of parallelism is FILES (thousands of them, one task each via
   * a parallelized file list + union or a streaming ingest), with
   * page-range splits only smoothing skew within unusually large
-  * files. The per-file catalog read costs two pages.
+  * files. The per-file catalog read walks every page, once per file
+  * per JVM (memoized, see `catalogCache`).
   */
 class JetMdbSource extends TableProvider with DataSourceRegister {
 
@@ -77,12 +78,22 @@ object JetMdbSource {
 
   /** Read page `n` of `path` through the Hadoop FS (works for local
     * and distributed stores alike). `pageSize` defaults to Jet4's
-    * 4096; Jet3 files read 2048-byte pages. */
+    * 4096; Jet3 files read 2048-byte pages.
+    *
+    * Seek-then-read on the one open stream, never the positioned
+    * `readFully(pos, buf)`: on a checksummed FS (the `file:` scheme)
+    * every positioned read builds a fresh checker that reopens the
+    * data file and its `.crc`, while a seek keeps both open and still
+    * verifies every chunk. The seek moves the stream's position, so
+    * a stream must not be shared between threads: every caller (each
+    * partition reader, catalog walk, complex-index build, append
+    * copy) opens its own. */
   def readPage(
       f: org.apache.hadoop.fs.FSDataInputStream, n: Int,
       pageSize: Int = PageSize): Array[Byte] = {
     val page = new Array[Byte](pageSize)
-    f.readFully(n.toLong * pageSize, page)
+    f.seek(n.toLong * pageSize)
+    f.readFully(page)
     page
   }
 
@@ -91,11 +102,11 @@ object JetMdbSource {
     * carries no usage-map shortcut — documented scope), and the
     * resolve runs at least twice per read (inferSchema +
     * planInputPartitions) and once more per reader factory. Without
-    * the memo a 2 GB file would pay ~524k driver page reads per
-    * occurrence; with it, once per file per JVM, invalidated when the
-    * file changes. Bounded: wholesale clear past 256 entries (catalog
-    * rows are a few hundred bytes each — the clear is paranoia, not
-    * pressure).
+    * the memo a 2 GB file would stream all ~524k pages through the
+    * driver per occurrence; with it, once per file per JVM,
+    * invalidated when the file changes. Bounded: wholesale clear past
+    * 256 entries (catalog rows are a few hundred bytes each — the
+    * clear is paranoia, not pressure).
     *
     * Staleness window (the standard metadata-cache tradeoff, same as
     * Spark's own FileStatusCache): a rewrite that leaves BOTH length

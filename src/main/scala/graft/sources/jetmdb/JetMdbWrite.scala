@@ -739,18 +739,7 @@ private[jetmdb] final case class JetMdbBatchWrite(
           require(st.getLen % Jet3Format.PageSize == 0,
             s"jetmdb/jet3 append: $path is not 2048-page-aligned " +
               s"(${st.getLen} bytes)")
-          val oldCount = (st.getLen / Jet3Format.PageSize).toInt
-          val pages = new Array[Array[Byte]](oldCount)
-          val in = fs.open(new Path(path))
-          try {
-            var n = 0
-            while (n < oldCount) {
-              val pg = new Array[Byte](Jet3Format.PageSize)
-              in.readFully(n.toLong * Jet3Format.PageSize, pg)
-              pages(n) = pg
-              n += 1
-            }
-          } finally in.close()
+          val pages = readPages(fs, st.getLen, Jet3Format.PageSize)
           Jet3Write.appendPages3(pages, table, schema, codes, rows,
             blobs, writePage)
         } else Jet3Write.freshPages3(table, schema, codes, rows, blobs,
@@ -765,6 +754,16 @@ private[jetmdb] final case class JetMdbBatchWrite(
       throw new java.io.IOException(
         s"jetmdb commit: failed to move $tmpOut to $path")
     fs.delete(staging, true)
+  }
+
+  /** Every page of the existing `path`, read in order through one
+    * open stream (the append paths splice into a full in-memory copy). */
+  private def readPages(fs: org.apache.hadoop.fs.FileSystem, len: Long,
+      pageSize: Int): Array[Array[Byte]] = {
+    val in = fs.open(new Path(path))
+    try Array.tabulate((len / pageSize).toInt)(
+      JetMdbSource.readPage(in, _, pageSize))
+    finally in.close()
   }
 
   /** APPEND path — multi-table `.mdb` construction: copy the existing
@@ -792,18 +791,8 @@ private[jetmdb] final case class JetMdbBatchWrite(
     val st = fs.getFileStatus(new Path(path))
     require(st.getLen % PageSize == 0,
       s"jetmdb append: $path is not page-aligned (${st.getLen} bytes)")
-    val oldCount = (st.getLen / PageSize).toInt
-    val pages = new Array[Array[Byte]](oldCount)
-    val in = fs.open(new Path(path))
-    try {
-      var n = 0
-      while (n < oldCount) {
-        val pg = new Array[Byte](PageSize)
-        in.readFully(n.toLong * PageSize, pg)
-        pages(n) = pg
-        n += 1
-      }
-    } finally in.close()
+    val pages = readPages(fs, st.getLen, PageSize)
+    val oldCount = pages.length
     checkHeader(pages(0))
     // the requested version must MATCH the file on disk: appending
     // Jet4-declared tables into an .accdb (or vice versa) would leave

@@ -66,6 +66,14 @@ class EncryptedMdbSpec extends AnyFunSuite {
     }
     assert(graft.sources.jetmdb.JetMdbSource.listTables(enc)
       .map(_._1) == Seq("t"))
+    // a ~1 MB scrambled table still streams each page once
+    val big = tmpDb("big.mdb")
+    JetMdbFixture.writeEncrypted(big, Seq(Table("big",
+      Seq(Col("k", 0x04), Col("pad", 0x0A)),
+      (0 until 20000).map(i =>
+        Seq(Integer.valueOf(i), "z" * (i % 40 + 1)): Seq[Any]))),
+      aceVersion = 0, dbKey = 0x5EC2E7A1)
+    TestSpark.assertJetScanReadsOnce(big, "big")
   }
 
   test("encrypted ACE .accdb with a multi-valued COMPLEX column: the " +

@@ -78,12 +78,14 @@ class Jet3SourceSpec extends AnyFunSuite {
       Jet3Fixture.Table(
         "T",
         Seq(Jet3Fixture.Col("a", 0x04), Jet3Fixture.Col("b", 0x0A)),
-        (1 to 300).map(i => Seq(Integer.valueOf(i), s"value_$i")))))
+        (1 to 20000).map(i => Seq(Integer.valueOf(i), s"value_$i")))))
     val only = spark.read.format("jetmdb").option("table", "T")
       .load(path).select("a")
-    assert(only.count() == 300)
+    assert(only.count() == 20000)
     assert(only.agg(sum(col("a"))).collect()(0).getLong(0) ==
-      300L * 301 / 2)
+      20000L * 20001 / 2)
+    // ~400 KB of 2 KB pages: every page is read once
+    TestSpark.assertJetScanReadsOnce(path, "T")
   }
 
   test("jet3 memo round-trips all three LVAL forms (inline, single, " +

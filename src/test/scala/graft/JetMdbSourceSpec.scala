@@ -103,15 +103,46 @@ class JetMdbSourceSpec extends AnyFunSuite {
   test("multi-page tables split into page-range partitions and read " +
     "completely") {
     val path = tmpMdb()
-    val rows = (0 until 3000).map(i =>
+    // 20 000 rows span ~1 MB: past the size where a per-page reopen
+    // of the .crc costs more than the page itself
+    val n = 20000
+    val rows = (0 until n).map(i =>
       Seq(Integer.valueOf(i), "x" * (i % 40 + 1)): Seq[Any])
     JetMdbFixture.write(path,
       Seq(Table("big", Seq(Col("k", 0x04), Col("pad", 0x0A)), rows)))
     val df = spark.read.format("jetmdb").option("table", "big").load(path)
-    assert(df.count() == 3000)
-    assert(df.agg(sum(col("k"))).as[Long].head() == 3000L * 2999 / 2)
+    assert(df.count() == n)
+    assert(df.agg(sum(col("k"))).as[Long].head() == n.toLong * (n - 1) / 2)
     // catalog sees exactly the one user table
     assert(JetMdbSource.listTables(path).map(_._1) == Seq("big"))
+    TestSpark.assertJetScanReadsOnce(path, "big")
+  }
+
+  test("a flipped byte on a data page fails the scan on the .crc " +
+    "checksum") {
+    val f = new java.io.File(tmpMdb())
+    (0 until 2000).map(i => (i, s"row $i")).toDF("k", "v")
+      .write.mode("overwrite").format("jetmdb").option("table", "t")
+      .save(f.toString)
+    assert(new java.io.File(f.getParentFile, s".${f.getName}.crc").exists)
+    def scan() =
+      spark.read.format("jetmdb").option("table", "t").load(f.toString)
+    assert(scan().count() == 2000) // memoizes the catalog
+    // the last page is a data page; the restored mtime keeps the
+    // catalog memo, so the partition reader's page read trips
+    val mtime = f.lastModified
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try {
+      raf.seek(f.length - 100)
+      val b = raf.read()
+      raf.seek(f.length - 100)
+      raf.write(b ^ 0xFF)
+    } finally raf.close()
+    assert(f.setLastModified(mtime))
+    val e = intercept[Exception](
+      scan().write.format("noop").mode("overwrite").save())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
   }
 
   test("column pruning reaches the scan and filters are reader-visible") {

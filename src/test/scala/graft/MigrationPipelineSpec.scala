@@ -44,11 +44,15 @@ class MigrationPipelineSpec extends AnyFunSuite {
   test("migrate loads into a real JDBC target (embedded Derby)") {
     val dbDir = Files.createTempDirectory("graft_derby_mig").resolve("db")
     val url = s"jdbc:derby:$dbDir;create=true"
-    val counts = MigrationPipeline.migrate(
-      spark, specs.take(1),
-      MigrationPipeline.JdbcSink(url),
-      Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
-    assert(counts == Map("Customer List" -> 2L))
+    val (counts, jobs, _) = TestSpark.jobsAndInput(
+      MigrationPipeline.migrate(
+        spark, specs,
+        MigrationPipeline.JdbcSink(url),
+        Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")))
+    assert(counts == Map("Customer List" -> 2L, "Order#Log" -> 1L))
+    // the load is the only Spark job: verify counts the target with a
+    // server-side COUNT(*)
+    assert(jobs == specs.size)
     val back = graft.sources.JdbcConnector.read(
       spark, url, "customer_list",
       props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
