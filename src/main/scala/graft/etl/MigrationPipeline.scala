@@ -15,9 +15,10 @@ import graft.sources.jetmdb.JetMdbSource.JetRelationshipRow
   * psql → mdb-export → COPY) with text as the only IR, this pipeline is
   * one declarative Spark plan per table: the source read, the
   * `applyJetSchema` normalization, and the sink write fuse into a
-  * single distributed job — per-table parallelism comes free from
-  * partitioned reads, and at 100 TB each table's load is itself a
-  * many-task job rather than one OS process.
+  * single distributed job. The tables load concurrently, each from its
+  * own driver thread, so their jobs share the cluster's slots (the
+  * shape of `pg_restore --jobs`); the constraints stage follows, once,
+  * after every load.
   */
 object MigrationPipeline {
 
@@ -186,60 +187,49 @@ object MigrationPipeline {
 
   /** Run the full migration; returns per-table row counts.
     * `sinkProps` passes driver/credential options to a JDBC sink.
+    *
+    * Every table loads at once: normalize, sink write, then a count of
+    * the TARGET, each table on its own driver thread of a pool sized
+    * `min(tables, defaultParallelism)`, so Spark's FIFO scheduler
+    * fills every free slot with some table's tasks and each table's
+    * driver-side steps (planning, CREATE TABLE, COUNT(*)) overlap the
+    * other tables' jobs. The loaders inherit the caller's job group,
+    * job tags and scheduler pool. JDBC connections stay bounded by the
+    * running tasks plus one COUNT(*) connection per loader.
+    *
+    * Sanitized target names must be distinct: `Order Log` and
+    * `order-log` would overwrite one another, so such a pair is
+    * rejected before any load starts.
+    *
     * After ALL tables load into a JDBC sink, the constraints stage
     * applies [[constraintDdl]] (PKs/indexes from each spec,
-    * `relationships` as FKs) — after, because bulk load into a
-    * constrained table pays per-row checking and FK targets may load
-    * later than their children. Parquet sinks carry no constraints;
+    * `relationships` as FKs) serially on one connection — after,
+    * because bulk load into a constrained table pays per-row checking
+    * and FK targets may load later than their children; serial,
+    * because DDL on different tables at once contends for the
+    * target's catalog locks (Derby fails a concurrent PK's NOT NULL
+    * alter with a lock timeout). Parquet sinks carry no constraints;
     * the DDL is still available via [[constraintDdl]] for the
-    * warehouse that will mount them. */
+    * warehouse that will mount them.
+    *
+    * Failure: the first table whose load throws cancels the other
+    * loads' jobs (they share one job tag), every loader is waited for,
+    * and `migrate` throws an exception naming that table with the
+    * original failure as its cause. The constraints stage does not
+    * run then. */
   def migrate(
       spark: SparkSession,
       tables: Seq[TableSpec],
       sink: Sink,
       sinkProps: Map[String, String] = Map.empty,
       relationships: Seq[JetRelationshipRow] = Nil): Map[String, Long] = {
-    val counts = tables.map { spec =>
-      val df =
-        if (spec.typed) normalizeTyped(spec.source(spark))
-        else normalize(spark, spec)
-      val n = sink match {
-        case ParquetSink(dir) =>
-          df.write.mode(SaveMode.Overwrite)
-            .parquet(s"$dir/${JetTypes.sanitizeName(spec.name)}.parquet")
-          spark.read
-            .parquet(s"$dir/${JetTypes.sanitizeName(spec.name)}.parquet")
-            .count()
-        case JdbcSink(url) =>
-          val table = JetTypes.sanitizeName(spec.name)
-          // Access ShortText is BOUNDED (≤255): create it as
-          // VARCHAR(255), not the writer's default unbounded type —
-          // Derby's CLOB can't even compare against string literals,
-          // so a ported WHERE clause would fail on the migrated
-          // column. Memo/LongText keeps the unbounded default.
-          val shortTexts = spec.jetSchema.collect {
-            case (n, graft.sources.JetTypes.ShortText) =>
-              s"${JetTypes.sanitizeName(n)} VARCHAR(255)"
-          }
-          val typeProps =
-            if (shortTexts.isEmpty) sinkProps
-            else sinkProps + ("createTableColumnTypes" ->
-              shortTexts.mkString(", "))
-          JdbcConnector.write(
-            df, url, table, SaveMode.Overwrite, props = typeProps)
-          // verify the TARGET (like the parquet branch) — counting the
-          // source would mask a write that dropped rows; one server-side
-          // COUNT(*) on a credentialed connection, not a Spark read job
-          val conn = JdbcConnector.connect(url, sinkProps)
-          try {
-            val rs = conn.createStatement()
-              .executeQuery(s"SELECT COUNT(*) FROM $table")
-            rs.next()
-            rs.getLong(1)
-          } finally conn.close()
-      }
-      spec.name -> n
-    }.toMap
+    tables.groupBy(t => JetTypes.sanitizeName(t.name)).foreach {
+      case (target, same) =>
+        require(same.size == 1,
+          s"migration: tables ${same.map(t => s"'${t.name}'").mkString(
+            " and ")} all map to target table '$target'")
+    }
+    val counts = loadAll(spark, tables)(loadTable(spark, _, sink, sinkProps))
     sink match {
       case JdbcSink(url) =>
         val dialect =
@@ -250,6 +240,121 @@ object MigrationPipeline {
       case _: ParquetSink => () // no constraint surface on files
     }
     counts
+  }
+
+  /** One table's load: normalize, write, then count the target. */
+  private def loadTable(
+      spark: SparkSession,
+      spec: TableSpec,
+      sink: Sink,
+      sinkProps: Map[String, String]): Long = {
+    val table = JetTypes.sanitizeName(spec.name)
+    val df =
+      if (spec.typed) normalizeTyped(spec.source(spark))
+      else normalize(spark, spec)
+    sink match {
+      case ParquetSink(dir) =>
+        df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$table.parquet")
+        spark.read.parquet(s"$dir/$table.parquet").count()
+      case JdbcSink(url) =>
+        // Access ShortText is BOUNDED (≤255): create it as
+        // VARCHAR(255), not the writer's default unbounded type —
+        // Derby's CLOB can't even compare against string literals,
+        // so a ported WHERE clause would fail on the migrated
+        // column. Memo/LongText keeps the unbounded default.
+        val shortTexts = spec.jetSchema.collect {
+          case (n, JetTypes.ShortText) =>
+            s"${JetTypes.sanitizeName(n)} VARCHAR(255)"
+        }
+        val typeProps =
+          if (shortTexts.isEmpty) sinkProps
+          else sinkProps + ("createTableColumnTypes" ->
+            shortTexts.mkString(", "))
+        JdbcConnector.write(
+          df, url, table, SaveMode.Overwrite, props = typeProps)
+        // verify the TARGET (like the parquet branch) — counting the
+        // source would mask a write that dropped rows; one server-side
+        // COUNT(*) on a credentialed connection, not a Spark read job
+        val conn = JdbcConnector.connect(url, sinkProps)
+        try {
+          val rs = conn.createStatement()
+            .executeQuery(s"SELECT COUNT(*) FROM $table")
+          rs.next()
+          rs.getLong(1)
+        } finally conn.close()
+    }
+  }
+
+  /** Runs `load` for every table concurrently and returns table name →
+    * result. The pool's threads are created here, by the calling
+    * thread, so they inherit its Spark local properties; each loader
+    * adds one job tag shared by this call and runs under `spark` as
+    * the active session (the jetmdb source resolves
+    * `SparkSession.active`). On the first failure the tag's jobs are
+    * cancelled — repeatedly, until every loader has returned, since a
+    * loader may start its job just after a cancel — and the failure
+    * is rethrown with the table's name. */
+  private def loadAll(spark: SparkSession, tables: Seq[TableSpec])(
+      load: TableSpec => Long): Map[String, Long] = {
+    import java.util.concurrent.{ExecutionException,
+      ExecutorCompletionService, Executors, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    if (tables.isEmpty) return Map.empty
+    val sc = spark.sparkContext
+    val tag = s"graft-migrate-${java.util.UUID.randomUUID()}"
+    val threadNo = new AtomicInteger
+    val pool = Executors.newFixedThreadPool(
+      math.min(tables.size, sc.defaultParallelism), { (r: Runnable) =>
+        val t = new Thread(r,
+          s"graft-migrate-loader-${threadNo.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val failed = new AtomicBoolean
+    try {
+      val done = new ExecutorCompletionService[(String, Long)](pool)
+      tables.foreach { spec =>
+        done.submit { () =>
+          if (failed.get) spec.name -> -1L // a sibling failed first
+          else {
+            sc.addJobTag(tag)
+            try spark.withActive(spec.name -> load(spec))
+            catch {
+              case scala.util.control.NonFatal(e) =>
+                throw new RuntimeException(
+                  s"migration: table '${spec.name}' failed to load: " +
+                    e.getMessage, e)
+            }
+          }
+        }
+      }
+      var first: Option[Throwable] = None
+      val counts = Map.newBuilder[String, Long]
+      var pending = tables.size
+      while (pending > 0) {
+        val f =
+          if (first.isEmpty) done.take()
+          else {
+            sc.cancelJobsWithTag(tag)
+            done.poll(100, TimeUnit.MILLISECONDS)
+          }
+        if (f != null) {
+          pending -= 1
+          try counts += f.get()
+          catch {
+            case e: ExecutionException if first.isEmpty =>
+              failed.set(true)
+              first = Some(e.getCause)
+            case _: ExecutionException => () // cancelled after the first
+          }
+        }
+      }
+      first.foreach(e => throw e)
+      counts.result()
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
 
   /** Run translated Jet ACTION queries — the saved UPDATE / DELETE /

@@ -17,8 +17,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     `numPartitions`) or the whole table funnels through one task;
   *   - `pushDownPredicate` is on by default — filters run server-side,
   *     exactly like the reference's WHERE-less COPY but better;
-  *   - writes batch via `batchsize` (server round-trips per 10k rows)
-  *     and `truncate` avoids DDL churn on overwrite.
+  *   - writes batch via `batchsize` (server round-trips per 10k rows).
   */
 object JdbcConnector {
 
@@ -77,19 +76,9 @@ object JdbcConnector {
     props.foldLeft(w) { case (r, (k, v)) => r.option(k, v) }.save()
   }
 
-  /** One-call migration of a table list — the reference's whole program
-    * (enumerate → per-table export → bulk load) as a library function.
-    * Source here is any DataFrame provider (the Access-mapped read or a
-    * staging lake); target is JDBC. */
-  def migrate(
-      tables: Seq[(String, DataFrame)],
-      url: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    tables.foreach { case (name, df) => write(df, url, name, mode) }
-
-  /** Key-based upsert — the INCREMENTAL load the one-shot `migrate`
-    * lacks (re-running a full overwrite per delta is the anti-pattern
-    * at warehouse scale).
+  /** Key-based upsert — the INCREMENTAL load the one-shot
+    * `MigrationPipeline.migrate` lacks (re-running a full overwrite
+    * per delta is the anti-pattern at warehouse scale).
     *
     * Shape: bulk-load the delta into a staging table with the normal
     * distributed batched write (all executors participate — the rows

@@ -44,7 +44,7 @@ class MigrationPipelineSpec extends AnyFunSuite {
   test("migrate loads into a real JDBC target (embedded Derby)") {
     val dbDir = Files.createTempDirectory("graft_derby_mig").resolve("db")
     val url = s"jdbc:derby:$dbDir;create=true"
-    val (counts, jobs, _) = TestSpark.jobsAndInput(
+    val (counts, m) = TestSpark.measure(
       MigrationPipeline.migrate(
         spark, specs,
         MigrationPipeline.JdbcSink(url),
@@ -52,13 +52,119 @@ class MigrationPipelineSpec extends AnyFunSuite {
     assert(counts == Map("Customer List" -> 2L, "Order#Log" -> 1L))
     // the load is the only Spark job: verify counts the target with a
     // server-side COUNT(*)
-    assert(jobs == specs.size)
+    assert(m.jobs == specs.size)
+    assert(tableExists(url, "order_log"))
     val back = graft.sources.JdbcConnector.read(
       spark, url, "customer_list",
       props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
     assert(back.count() == 2L)
     assert(back.columns.toSeq ==
       Seq("customer_id", "is_active", "credit_limit", "full_name"))
+  }
+
+  private val derbyProps =
+    Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+
+  private def freshDerby(prefix: String): String =
+    s"jdbc:derby:${Files.createTempDirectory(prefix).resolve("db")};create=true"
+
+  /** A one-column, one-partition table of `rows` values whose every
+    * row passes through `f` inside the task. */
+  private def taskTable(name: String, rows: Int)(f: Long => Long) =
+    TableSpec(name,
+      s => {
+        val g = org.apache.spark.sql.functions.udf(f)
+        s.range(0, rows, 1, 1).select(g($"id").cast("string").as("v"))
+      },
+      Seq("v" -> LongInteger))
+
+  private def tableExists(url: String, table: String): Boolean = {
+    val conn = graft.sources.JdbcConnector.connect(url, derbyProps)
+    try conn.getMetaData.getTables(null, null, table.toUpperCase, null)
+      .next()
+    finally conn.close()
+  }
+
+  test("migrate runs the tables' loads at once: at least two jobs " +
+    "overlap, one job per table, exact counts") {
+    val url = freshDerby("graft_derby_overlap")
+    // each table's single task holds its slot for 0.5 s, so a serial
+    // migration cannot overlap two jobs
+    val slow = (1 to 3).map(i =>
+      taskTable(s"Slow $i", 5) { v => Thread.sleep(100); v * i })
+    val (counts, m) = TestSpark.measure(
+      MigrationPipeline.migrate(spark, specs ++ slow,
+        MigrationPipeline.JdbcSink(url), derbyProps))
+    assert(counts == Map("Customer List" -> 2L, "Order#Log" -> 1L,
+      "Slow 1" -> 5L, "Slow 2" -> 5L, "Slow 3" -> 5L))
+    assert(m.jobs == specs.size + slow.size)
+    val overlapping = m.spans.combinations(2).count {
+      case Seq((s1, e1), (s2, e2)) => s1 < e2 && s2 < e1
+    }
+    assert(overlapping > 0, s"no two jobs overlapped: ${m.spans}")
+  }
+
+  test("migrate rejects tables whose sanitized names collide, " +
+    "before any target table is created") {
+    val url = freshDerby("graft_derby_collide")
+    val clash = Seq(
+      TableSpec("Order Log",
+        _ => Seq("1").toDF("Order ID"), Seq("Order ID" -> LongInteger)),
+      TableSpec("order-log",
+        _ => Seq("2").toDF("Order ID"), Seq("Order ID" -> LongInteger)))
+    val e = intercept[IllegalArgumentException] {
+      MigrationPipeline.migrate(spark, specs.take(1) ++ clash,
+        MigrationPipeline.JdbcSink(url), derbyProps)
+    }
+    assert(e.getMessage.contains("'Order Log'") &&
+      e.getMessage.contains("'order-log'") &&
+      e.getMessage.contains("order_log"), e.getMessage)
+    assert(!tableExists(url, "customer_list"))
+    assert(!tableExists(url, "order_log"))
+  }
+
+  test("a failing table fails the migration fast and clean: the " +
+    "error names it, sibling jobs are cancelled, no loader survives, " +
+    "and the next migration succeeds") {
+    val url = freshDerby("graft_derby_fail")
+    // the siblings would hold their slots for 60 s uncancelled
+    val failing = Seq(
+      taskTable("Left Slow", 1200) { v => Thread.sleep(50); v },
+      taskTable("Broken Middle", 10) { v =>
+        if (v == 3) throw new IllegalStateException("boom in task")
+        v
+      },
+      taskTable("Right Slow", 1200) { v => Thread.sleep(50); v })
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      MigrationPipeline.migrate(spark, failing,
+        MigrationPipeline.JdbcSink(url), derbyProps)
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("'Broken Middle'"), e.getMessage)
+    val cause = e.getCause
+    assert(cause != null &&
+      !cause.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](cause)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom in task")),
+      cause)
+    assert(secs < 30, s"migration took $secs s to fail")
+    // the status store is fed by the listener bus, which lags the
+    // scheduler: poll it briefly
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    val loaders = Thread.getAllStackTraces.keySet.toArray(
+      Array.empty[Thread]).filter(_.getName.startsWith("graft-migrate-"))
+    loaders.foreach(_.join(10000))
+    assert(loaders.forall(!_.isAlive))
+    val next = MigrationPipeline.migrate(spark, specs,
+      MigrationPipeline.JdbcSink(freshDerby("graft_derby_after")),
+      derbyProps)
+    assert(next == Map("Customer List" -> 2L, "Order#Log" -> 1L))
   }
 
   test("ACE complex column migrates RELATIONALLY (r13): " +

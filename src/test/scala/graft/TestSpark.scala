@@ -1,9 +1,11 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (SURVEY.md §5). */
@@ -21,17 +23,23 @@ object TestSpark {
     s
   }
 
+  /** What the Spark jobs of a measured block did: how many ran, the
+    * input bytes (`inputMetrics.bytesRead`) their tasks read, and each
+    * job's (start, end) times in ms. */
+  final case class Measured(
+      jobs: Int, inputBytes: Long, spans: Seq[(Long, Long)])
+
   /** Runs `body` on this thread under a fresh job group and returns
-    * its result with the number of Spark jobs it started and the
-    * input bytes (`inputMetrics.bytesRead`) its tasks read. The
-    * listener bus delivers events asynchronously but in order, so a
-    * marker job started after `body` is seen only once every event
-    * `body` caused has been counted. */
-  def jobsAndInput[T](body: => T): (T, Int, Long) = {
+    * its result with what that group's jobs did. The listener bus
+    * delivers events asynchronously but in order, so a marker job
+    * started after `body` is seen only once every event `body` caused
+    * has been counted. */
+  def measure[T](body: => T): (T, Measured) = {
     val sc = session.sparkContext
     val group = s"measured-${java.util.UUID.randomUUID()}"
     val stages = ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new AtomicInteger
+    val starts = new ConcurrentHashMap[Int, Long]()
+    val spans = new ConcurrentLinkedQueue[(Long, Long)]()
     val bytes = new AtomicLong
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -39,10 +47,12 @@ object TestSpark {
         Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
           .orNull match {
           case `group` =>
-            jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_))
+            starts.put(e.jobId, e.time); e.stageIds.foreach(stages.add(_))
           case g if g == s"$group-marker" => drained.countDown()
           case _ => ()
         }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(starts.get(e.jobId)).foreach(t => spans.add((t, e.time)))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId) && e.taskMetrics != null)
           bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
@@ -55,7 +65,7 @@ object TestSpark {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(60, TimeUnit.SECONDS),
         "listener bus did not drain")
-      (out, jobs.get, bytes.get)
+      (out, Measured(starts.size, bytes.get, spans.asScala.toSeq))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -77,9 +87,10 @@ object TestSpark {
     }
     assert(crc.exists)
     val onDisk = p.length + crc.length
-    val (_, _, read) = jobsAndInput(
+    val (_, m) = measure(
       session.read.format("jetmdb").option("table", table).load(path)
         .write.format("noop").mode("overwrite").save())
+    val read = m.inputBytes
     assert(read > 0 && read <= onDisk * 3 / 2,
       s"scan of $path read $read bytes for $onDisk on disk")
   }
