@@ -513,11 +513,14 @@ object MigrationPipeline {
       savedQueries: Seq[(String, String)] = Nil,
       params: Map[String, Any] = Map.empty)
       : (Map[String, Long], Seq[(String, Int)], Seq[String]) = {
-    // the .mdb's own unique indexes feed the tie-faithful TOP n
-    // translation: TOP over a unique ORDER BY keeps the LIMIT fast
-    // path, anything else gets the tie-aware windowed form
-    val uk = uniqueKeysFromSpecs(specsFromJetMdb(mdbPath))
-    val counts = migrateJetMdb(spark, mdbPath, JdbcSink(url), sinkProps)
+    // one TDEF pass serves both the load and the .mdb's own unique
+    // indexes, which feed the tie-faithful TOP n translation: TOP over
+    // a unique ORDER BY keeps the LIMIT fast path, anything else gets
+    // the tie-aware windowed form
+    val specs = specsFromJetMdb(mdbPath)
+    val uk = uniqueKeysFromSpecs(specs)
+    val counts = migrate(spark, specs, JdbcSink(url), sinkProps,
+      graft.sources.jetmdb.JetMdbSource.relationships(mdbPath))
     val applied =
       runActionQueries(url, actionQueries, params, sinkProps, uk)
     // saved SELECT queries read the POST-action state: register each
