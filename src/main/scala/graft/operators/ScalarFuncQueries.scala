@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
 
 import graft.QDef
+import graft.operators.SortSetQueries.wideSort
 import graft.sources.TableLoader._
 
 /** Scalar function packs: the Jet-SQL built-in surface mapped to
@@ -88,11 +89,10 @@ object ScalarFuncQueries {
       |  make_date(2020, 6, 15) AS fixed_date
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    // r15 opt: raw-column sort first, date pack projected above (the
-    // range-sampler double-evaluation pattern, see q_variant_funcs)
-    orders(s, d)
-      .select(col("o_orderkey"), col("o_orderdate"))
-      .orderBy(col("o_orderkey"))
+    // raw-column sort first, date pack projected above it at full
+    // width (the range-sampler pattern, see q_variant_funcs)
+    wideSort(orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
+      col("o_orderkey"))
       .select(
         col("o_orderkey"),
         year(col("o_orderdate")).as("yr"),
@@ -124,14 +124,14 @@ object ScalarFuncQueries {
       |FROM lineitem
       |WHERE l_linenumber = 1 AND l_quantity >= 1
       |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
-    // r15 opt: raw-column sort first, math pack projected above (the
-    // range-sampler double-evaluation pattern, see q_variant_funcs)
-    lineitem(s, d)
+    // raw-column sort first, math pack projected above it at full
+    // width (the range-sampler pattern, see q_variant_funcs)
+    val raw = lineitem(s, d)
       .filter(col("l_linenumber") === 1 && col("l_quantity") >= 1)
       .select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_discount"), col("l_extendedprice"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
+    wideSort(raw, col("l_orderkey"), col("l_linenumber"))
       .select(
         col("l_orderkey"), col("l_linenumber"),
         abs(col("l_discount") - 0.05).as("abs_d"),
@@ -414,16 +414,17 @@ object ScalarFuncQueries {
     val v = parse_json(col("props"))
     val nested = parse_json(concat(lit("{\"u\":{\"id\":"),
       col("user_id").cast("string"), lit("}}")))
-    // r15 opt (guide §1.2 don't-compute-twice): the global orderBy's
-    // range partitioner SAMPLES its child to pick bounds, so a heavy
-    // projection below the sort executes TWICE per run. Sorting the
-    // narrow scan first and projecting ABOVE the sort keeps the
-    // variant parse/extract single-pass (sort order is preserved
-    // through a project; rows and order identical). Measured 1.42 →
-    // 0.80 s isolated (pyspark A/B, plan pinned: Project above Sort).
-    events(s, d)
-      .select(col("event_id"), col("user_id"), col("props"))
-      .orderBy(col("event_id"))
+    // Don't compute twice: a global sort's range partitioner SAMPLES
+    // its child to pick bounds, so a heavy projection below the sort
+    // executes TWICE per run. Sorting the narrow scan first and
+    // projecting ABOVE the sort keeps the variant parse/extract
+    // single-pass (order is preserved through a project; rows and
+    // order identical). Measured 1.42 → 0.80 s isolated. wideSort, not
+    // orderBy: AQE coalesced orderBy's small sorted output to one
+    // partition, so the projection ran as one 0.67-0.70 s task.
+    wideSort(
+      events(s, d).select(col("event_id"), col("user_id"), col("props")),
+      col("event_id"))
       .select(
         col("event_id"),
         variant_get(v, "$.k", "int").as("k_int"),
@@ -492,15 +493,15 @@ object ScalarFuncQueries {
       |FROM lineitem
       |WHERE l_linenumber = 1 AND l_quantity <= 10
       |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
-    // r15 opt: sort the raw columns, project the trig pack ABOVE the
-    // sort — the range sampler otherwise evaluates all 7 libm calls
-    // twice per run (see q_variant_funcs for the measured pattern)
-    lineitem(s, d)
+    // sort the raw columns, project the trig pack ABOVE the sort at
+    // full width — the range sampler otherwise evaluates all 7 libm
+    // calls twice per run (see q_variant_funcs for the pattern)
+    val raw = lineitem(s, d)
       .filter(col("l_linenumber") === 1 && col("l_quantity") <= 10)
       .select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_discount"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
+    wideSort(raw, col("l_orderkey"), col("l_linenumber"))
       .select(
         col("l_orderkey"), col("l_linenumber"),
         round(sin(col("l_quantity")), 4).as("sin_q"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.QDef
@@ -12,6 +13,22 @@ import graft.sources.TableLoader._
   * materializes, which is what makes top-k viable on 100 TB.
   */
 object SortSetQueries {
+
+  /** `df` totally ordered by `keys` (ascending), at the session's full
+    * shuffle width: the range exchange `orderBy` plans, but at a width
+    * given by the caller, which AQE does not coalesce, then a sort
+    * inside each partition. Every row of partition i precedes every
+    * row of partition i+1, so the order is as total as `orderBy`'s.
+    *
+    * For a narrow sort under a heavy projection (the projection goes
+    * above the sort, or the range sampler evaluates it twice): under
+    * `orderBy` AQE coalesces the sort's small output to one partition,
+    * so the projection above it runs in one task. */
+  def wideSort(df: DataFrame, keys: Column*): DataFrame =
+    df.repartitionByRange(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        keys: _*)
+      .sortWithinPartitions(keys: _*)
 
   /** Multi-key global sort + LIMIT (Access TOP N). */
   val qSortLimit: QDef = QDef(

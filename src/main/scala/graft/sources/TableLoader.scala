@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.plans.DecimalSumRule
+
 /** Central table loader for the testdata star schema + extension tables.
   *
   * Responsibilities (SURVEY.md §0 "hard-won environment facts", §7 M0):
@@ -17,7 +19,10 @@ import org.apache.spark.storage.StorageLevel
   *   - '''Session defaults''': UTC session timezone, TIMESTAMP_MICROS
   *     parquet output (so written timestamps round-trip bit-exactly into
   *     the DuckDB comparator), AQE left on (runtime coalescing + skew
-  *     handling is the first-line answer at 100 TB scale).
+  *     handling is the first-line answer at 100 TB scale), and
+  *     [[graft.plans.DecimalSumRule]] installed, so every SUM of a
+  *     DECIMAL(9..18) accumulates exactly in two longs instead of
+  *     Spark's BigDecimal buffer (same result, no option to turn off).
   *   - '''Plan memoization, NOT data caching''': per (session, sfDir,
   *     table) the loaded DataFrame object is memoized, so a multi-query
   *     run (Verify / Bench) lists files and reads parquet footers once.
@@ -69,6 +74,13 @@ object TableLoader {
     // spark.sql.adaptive.coalescePartitions.initialPartitionNum per
     // deployment); the engine keeps AQE on so whatever width the
     // submit chooses is coalesced per-stage by actual bytes.
+    // Exact DECIMAL(9-18) sums on two longs instead of a BigDecimal
+    // buffer (graft.plans.DecimalSumRule); added once per session.
+    val x = spark.experimental
+    x.synchronized {
+      if (!x.extraOptimizations.contains(DecimalSumRule))
+        x.extraOptimizations = x.extraOptimizations :+ DecimalSumRule
+    }
   }
 
   /** Load (and memoize) one table for a scale-factor directory. */

@@ -23,11 +23,18 @@ object TestSpark {
     s
   }
 
+  /** The fixture tables of one scale factor (TESTDATA.md), under
+    * `~/testdata` as perfbench reads them. */
+  def fixtures(sf: String): String =
+    s"${sys.props("user.home")}/testdata/$sf"
+
   /** What the Spark jobs of a measured block did: how many ran, the
-    * input bytes (`inputMetrics.bytesRead`) their tasks read, and each
-    * job's (start, end) times in ms. */
+    * input bytes (`inputMetrics.bytesRead`) their tasks read, each
+    * job's (start, end) times in ms, and the tasks each stage ran (by
+    * stage id; skipped stages ran none and are absent). */
   final case class Measured(
-      jobs: Int, inputBytes: Long, spans: Seq[(Long, Long)])
+      jobs: Int, inputBytes: Long, spans: Seq[(Long, Long)],
+      stageTasks: Map[Int, Int])
 
   /** Runs `body` on this thread under a fresh job group and returns
     * its result with what that group's jobs did. The listener bus
@@ -41,6 +48,7 @@ object TestSpark {
     val starts = new ConcurrentHashMap[Int, Long]()
     val spans = new ConcurrentLinkedQueue[(Long, Long)]()
     val bytes = new AtomicLong
+    val tasks = new ConcurrentHashMap[Int, Int]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -54,8 +62,11 @@ object TestSpark {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(starts.get(e.jobId)).foreach(t => spans.add((t, e.time)))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+        if (stages.contains(e.stageId)) {
+          tasks.merge(e.stageId, 1, Integer.sum)
+          if (e.taskMetrics != null)
+            bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -65,7 +76,8 @@ object TestSpark {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(60, TimeUnit.SECONDS),
         "listener bus did not drain")
-      (out, Measured(starts.size, bytes.get, spans.asScala.toSeq))
+      (out, Measured(starts.size, bytes.get, spans.asScala.toSeq,
+        tasks.asScala.toMap))
     } finally sc.removeSparkListener(listener)
   }
 
