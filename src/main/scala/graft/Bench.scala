@@ -316,9 +316,39 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** The local[n] width of every driver session (`SPARK_GRAFT_CPUS`,
+    * default 4): task slots and shuffle partitions alike. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The fixture directory Bench and the dev tools read
+    * (`SPARK_GRAFT_SF_DIR`, default `~/testdata/sf0.1`). */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    s"${sys.props("user.home")}/testdata/sf0.1")
+
+  /** The one driver session: Bench, Verify and `graft.tools.Dev` all
+    * run on it, so a dev timing or plan is the plan the bench runs.
+    * [[graft.sources.TableLoader.configure]] sets the UTC time zone,
+    * the parquet timestamp type and the decimal-sum rule. */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      // the ContextCleaner is WEAK-REF driven: on a 128 GiB heap a
+      // whole bench session can finish without one full GC (gc_ms ≈ 0
+      // in every r9 raw run), so broadcast/shuffle/checkpoint cleanup
+      // never fires and a long session accumulates. Periodic GC (down
+      // from the 30 min default) bounds that accumulation; per-run
+      // `rdds` makes any residue visible in the artifact.
+      .config("spark.cleaner.periodicGC.interval", "60s")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.sources.TableLoader.configure(spark)
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val rawCpus = Bench.cpus
     // JSON-safe rendering for the artifact's "cpus" field (a local[*]
     // style value must be quoted, a thread count stays a number)
     val cpus =
@@ -374,19 +404,7 @@ object Bench {
           s"[bench] SPARK_GRAFT_BENCH_ONLY ignoring unknown query " +
             s"names: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$rawCpus]")
-      .config("spark.sql.shuffle.partitions", rawCpus)
-      .config("spark.ui.enabled", "false")
-      // the ContextCleaner is WEAK-REF driven: on a 128 GiB heap a
-      // whole bench session can finish without one full GC (gc_ms ≈ 0
-      // in every r9 raw run), so broadcast/shuffle/checkpoint cleanup
-      // never fires and a long session accumulates. Periodic GC (down
-      // from the 30 min default) bounds that accumulation; per-run
-      // `rdds` makes any residue visible in the artifact.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // one-time warm-up: file listing, parquet footers, first codegen,
     // plus the session-lifetime index/cache builds that are setup cost,
     // not query cost — the minhash shingle persist and the IVF k-means

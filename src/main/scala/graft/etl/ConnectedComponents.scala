@@ -1,128 +1,33 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Distributed connected components by iterative min-label propagation
-  * — the step that turns PAIRWISE near-dup candidates (minhash / simhash
-  * / embedding-LSH output) into transitive duplicate GROUPS, so corpus
-  * dedup can keep one canonical document per cluster instead of
-  * resolving pairs greedily.
+/** Connected components of an undirected edge list — the step that
+  * turns PAIRWISE near-dup candidates (minhash / simhash / embedding-LSH
+  * output) into transitive duplicate GROUPS, so corpus dedup can keep
+  * one canonical document per cluster instead of resolving pairs
+  * greedily.
   *
-  * Algorithm: every vertex starts labeled with itself; each round every
-  * vertex takes the min of its own label and its neighbors' labels;
-  * stop when no label changes. Each round is one shuffle join + one
-  * aggregation — fully distributed, no driver-side graph. Round count
-  * is bounded by the component diameter, which for near-dup clusters
-  * (docs similar to a shared template) is small; the `maxIter` guard
-  * turns a pathological chain into an explicit error rather than an
-  * endless job. For adversarial long-chain graphs at extreme scale
-  * [[runStar]] implements the large-star/small-star variant (Kiveris
-  * et al., "Connected Components in MapReduce") — O(log n) rounds
-  * independent of diameter — and [[runAuto]]'s distributed fallback
-  * rides it; [[run]] stays the minimal-per-round form for the
-  * bounded-diameter graphs dedup actually produces.
+  * Edges are columns `src`, `dst`; vertices of any numeric type that
+  * CASTS LOSSLESSLY to bigint — ids are canonicalized through
+  * `try_cast("bigint")`, and a value past Long range, e.g. a
+  * decimal(38,0) 128-bit hash, nulls under try_cast and is dropped with
+  * the null-endpoint edges: fold such ids to 64 bits first (under ANSI
+  * mode a plain cast would throw instead). Every path
+  * returns (v, cc) with cc = the minimum vertex id of v's component;
+  * isolated vertices (no edges) are absent. [[runAuto]] clusters a
+  * graph within its edge budget with a driver union-find and sends a
+  * larger one to [[runStar]], whose O(log n) rounds do not depend on
+  * component diameter.
   */
 object ConnectedComponents {
 
-  /** Compute components of the undirected graph given by `edges`
-    * (columns `src`, `dst`; vertices of any numeric type that CASTS
-    * LOSSLESSLY to bigint — ids are canonicalized through
-    * `try_cast("bigint")`, and a value past Long range, e.g. a
-    * decimal(38,0) 128-bit hash, nulls under try_cast and is dropped
-    * with the null-endpoint edges: fold such ids to 64 bits first.
-    * try_cast, not cast (r12 advice): under Spark's default ANSI mode
-    * a plain cast THROWS on overflow, so the documented silent-drop
-    * contract needs the try_ form).
-    * Returns (vertex, component) where component = min vertex id in the
-    * component. Isolated vertices (no edges) are absent — callers union
-    * them back with component = self if needed. */
-  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val src: Column = col("src")
-    val dst: Column = col("dst")
-    // symmetrize once; persist — every round joins against it
-    val sym = edges.select(src.try_cast("bigint").as("src"),
-        dst.try_cast("bigint").as("dst"))
-      .union(edges.select(dst.try_cast("bigint").as("src"),
-        src.try_cast("bigint").as("dst")))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint (not just persist) each round: an iterative
-    // DataFrame loop otherwise accumulates an exponentially nested
-    // logical plan — planning/explain alone OOMs after ~20 rounds.
-    // Checkpointing truncates lineage so every round plans against a
-    // flat scan of the previous round's blocks. (On a real cluster
-    // prefer reliable `checkpoint()` with a checkpoint dir — local
-    // blocks die with an executor.)
-    // chk = the round's CHECKPOINTED frame (the LogicalRDD-leaf frame
-    // Checkpoints can release); labels = its (v, cc) view
-    var chk: DataFrame = null
-    var labels: DataFrame = null
-    var iter = 0
-    var converged = false
-    // try/finally: on EVERY exit (convergence, maxIter throw, a failed
-    // round, or a failure in the INITIAL eager checkpoint — which is why
-    // that checkpoint sits inside the try) sym's cache is released, and
-    // on the throw paths the in-flight round's checkpoint blocks go
-    // too — only the CONVERGED result keeps its blocks, which the
-    // caller owns (a one-shot caller relies on the harness sweep; loop
-    // callers pass it straight to the next round's
-    // Checkpoints.replacing)
-    try {
-      chk = sym.select(col("src").as("v")).distinct()
-        .withColumn("cc", col("v"))
-        .localCheckpoint(true)
-      labels = chk
-      while (!converged) {
-        if (iter >= maxIter)
-          throw new IllegalStateException(
-            s"connected components did not converge in $maxIter rounds " +
-              "(component diameter too large — use runStar, the " +
-              "large-star/small-star variant, for chain-shaped graphs)")
-        // min label among neighbors, per vertex
-        val nbrMin = sym
-          .join(labels, sym("dst") === labels("v"))
-          .groupBy(sym("src").as("nv"))
-          .agg(min(col("cc")).as("nbr_cc"))
-        // materialize round N, then release round N−1's checkpoint
-        // blocks (Checkpoints.replacing): peak checkpoint residency
-        // stays at 2 frontier copies instead of growing one per round,
-        // and a benchmark/production sweep never inherits this history
-        val next = graft.plans.Checkpoints.replacing(
-          labels
-            .join(nbrMin, labels("v") === col("nv"), "left")
-            .select(
-              col("v"),
-              least(col("cc"), coalesce(col("nbr_cc"), col("cc"))).as("cc"),
-              (col("cc") =!= least(col("cc"),
-                coalesce(col("nbr_cc"), col("cc")))).as("changed")),
-          chk)
-        // chk must point at `next` BEFORE the count below: if that
-        // job throws, the finally's unpersist has to release the
-        // frame replacing() just checkpointed, not the already-freed
-        // previous one
-        chk = next
-        val changed = next.filter(col("changed")).limit(1).count()
-        labels = next.select(col("v"), col("cc"))
-        if (changed == 0) converged = true
-        iter += 1
-      }
-    } finally {
-      sym.unpersist()
-      if (!converged && chk != null) graft.plans.Checkpoints.unpersist(chk)
-    }
-    labels
-  }
-
   /** Alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond" — the public
-    * formulation [[run]]'s scaladoc points at): converges in O(log n)
-    * rounds regardless of component DIAMETER, where min-label
-    * propagation needs diameter-many rounds and [[run]]'s maxIter
-    * guard turns a long chain into an explicit error. Each round is
-    * two grouped-min + join passes over the canonical (larger →
+    * "Connected Components in MapReduce and Beyond"): converges in
+    * O(log n) rounds regardless of component DIAMETER, where min-label
+    * propagation needs diameter-many rounds. Each round is two
+    * grouped-min + join passes over the canonical (larger →
     * smaller) edge set:
     *   - LARGE-STAR around every center c: connect each neighbor
     *     LARGER than c to m = min(N(c) ∪ {c}) — long tails fold onto
@@ -133,9 +38,10 @@ object ConnectedComponents {
     * Fixpoint = the canonical edge SET is unchanged (exact count +
     * except-emptiness test, never a hash heuristic); at fixpoint the
     * edges form one star per component, every vertex pointing at its
-    * component minimum — the same (v, cc) contract [[run]] returns.
-    * Same checkpoint discipline as [[run]]: each round's edge set is
-    * eagerly localCheckpoint'ed and the previous round's blocks are
+    * component minimum — the (v, cc) contract of this object. Each
+    * round's edge set is eagerly localCheckpoint'ed, since an
+    * iterative DataFrame loop otherwise nests every round's plan into
+    * one ever deeper tree, and the previous round's blocks are
     * released once the comparison is done. */
   def runStar(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     var chk: DataFrame = null
@@ -159,13 +65,12 @@ object ConnectedComponents {
         col("dst").try_cast("bigint").as("b"))
       .localCheckpoint(true)
     // Vertices whose ONLY edges are self-loops (x,x) must still come
-    // out labeled (x → x): run() symmetrizes (x,x) into the vertex set
-    // and runAuto's driver union-find emits them, so the star path
-    // unions them back as singletons below — otherwise dedupGroups
-    // output would differ across the edge-budget gate for degenerate
-    // self-pairs. (Null endpoints fall out of the === just like they
-    // fall out of the =!= canonical filter.) Checkpointed (tiny) so
-    // `prepped` can release before the loop runs.
+    // out labeled (x → x): runAuto's driver union-find emits them, so
+    // the star path unions them back as singletons below — otherwise
+    // dedupGroups output would differ across the edge-budget gate for
+    // degenerate self-pairs. (Null endpoints fall out of the === just
+    // like they fall out of the =!= canonical filter.) Checkpointed
+    // (tiny) so `prepped` can release before the loop runs.
     val selfVerts = prepped
       .filter(col("a") === col("b"))
       .select(col("a").as("v"))
@@ -240,15 +145,15 @@ object ConnectedComponents {
 
   /** Budget-guarded components: near-dup pair graphs are CLUSTER-
     * sized (docs similar to shared templates), not corpus-sized, so
-    * they usually fit one bounded limit-collect — and min-label
-    * propagation pays ~5 join/agg/checkpoint JOBS regardless of graph
-    * size (the q_er_clusters measurement: 3.2 s → 0.5 s at sf0.1 from
-    * exactly this swap). ONE job decides the path AND fetches the
-    * small graph: a budget+1 limit-collect never materializes more
-    * than ~1.6 MB on the driver; past the budget the SAME edges route
-    * to the distributed propagation. Labels are identical either way
-    * (component = min vertex id) — ConnectedComponentsSpec pins path
-    * equivalence. */
+    * they usually fit one bounded limit-collect — and a distributed
+    * path pays several join/agg/checkpoint JOBS regardless of graph
+    * size (the q_er_clusters measurement: 3.2 s → 0.5 s at sf0.1 when
+    * the driver path replaced min-label propagation). ONE job decides
+    * the path AND fetches the small graph: a budget+1 limit-collect
+    * never materializes more than ~1.6 MB on the driver; past the
+    * budget the SAME edges route to [[runStar]]. Labels are identical
+    * either way (component = min vertex id) — ConnectedComponentsSpec
+    * pins path equivalence. */
   def runAuto(edges: DataFrame, edgeBudget: Int = 100000): DataFrame = {
     // The budget counts RAW rows (the limit-collect gate is one cheap
     // short-circuiting job; a distinct() first would force a full
@@ -264,10 +169,8 @@ object ConnectedComponents {
       .select(col("src").try_cast("bigint"), col("dst").try_cast("bigint"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .limit(edgeBudget + 1).collect()
-    // past the budget the graph's diameter is unknown too — the star
-    // contraction's O(log n) rounds make no diameter assumption,
-    // where run()'s maxIter would turn a long duplicate-chain into an
-    // error at exactly the scale that matters
+    // past the budget the graph's diameter is unknown too, and the
+    // star contraction's O(log n) rounds make no diameter assumption
     if (fetched.length > edgeBudget) runStar(edges)
     else {
       val es = fetched.map(r => (r.getLong(0), r.getLong(1)))
@@ -281,7 +184,7 @@ object ConnectedComponents {
       es.foreach { case (a, b) =>
         val (ra, rb) = (find(a), find(b))
         // union toward the SMALLER root: keeps labels at the
-        // component minimum, the run() contract
+        // component minimum, the contract of every path
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val spark = edges.sparkSession

@@ -492,10 +492,11 @@ object DedupQueries {
 
   /** Transitive corpus dedup UNDER THE DRIVER HASH GATE: the
     * oracle-green exact n-gram Jaccard pair set (q_dedup_ngram_jaccard,
-    * threshold 0.05) → distributed connected components (min-label
-    * propagation, etl.ConnectedComponents) → keep the min-doc_id
-    * survivor per cluster. The DuckDB oracle recomputes the SAME
-    * clustering as a recursive-CTE transitive closure over the same
+    * threshold 0.05) → connected components (etl.ConnectedComponents
+    * .dedupGroups: driver union-find within the edge budget, star
+    * contraction past it) → keep the min-doc_id survivor per cluster.
+    * The DuckDB oracle recomputes the SAME clustering as a
+    * recursive-CTE transitive closure over the same
     * pair SQL, so the CC operator itself is hash-pinned — until round
     * 10 this row was no_oracle because its pairs came from the
     * engine-specific minhash family; that corpus-scale path lives on
@@ -720,8 +721,8 @@ object DedupQueries {
     * clusters are labeled by their minimum node id and only
     * multi-name clusters are emitted (singletons are not resolutions).
     * Scale: same blocked sub-quadratic candidate stage as the JW pair
-    * query, then min-label propagation whose per-round cost is one
-    * join+agg on the (tiny) name-pair graph. Oracle since round 10:
+    * query, then connected components over the (tiny) name-pair
+    * graph (ConnectedComponents.runAuto). Oracle since round 10:
     * a recursive-CTE transitive closure (see qErClusters below);
     * RoundSixSpec additionally replays the clustering with an
     * independent union-find over the same pairs. */
@@ -729,7 +730,7 @@ object DedupQueries {
     * driver-side: the graph is VOCABULARY-sized (distinct names after
     * blocking + threshold), not data-sized, so even catalog-scale
     * inputs usually stay collectable; past the budget the same edges
-    * route to the distributed min-label propagation instead. */
+    * route to the distributed star contraction instead. */
   val erEdgeBudget = 100000L
 
   private[graft] def erGraph(s: SparkSession, d: String)
@@ -761,13 +762,10 @@ object DedupQueries {
       s: SparkSession, nodes: DataFrame, edges: DataFrame,
       forceDistributed: Boolean = false): DataFrame = {
     // budget gate + driver union-find live in ConnectedComponents
-    // .runAuto — this site used to carry a drifted inline copy whose
-    // over-budget path still routed to the diameter-bounded run(), so
-    // a long similarity CHAIN past the budget threw at maxIter where
-    // runStar converges (r11 review; the copies had also diverged on
-    // null filtering). The measured driver-path win (3.2 s → 0.5 s at
-    // sf0.1) is runAuto's own scaladoc'd contract; labels identical
-    // either way (RoundSixSpec pins path equivalence).
+    // .runAuto, whose over-budget path is runStar. The measured
+    // driver-path win (3.2 s → 0.5 s at sf0.1) is runAuto's own
+    // scaladoc'd contract; labels identical either way (RoundSixSpec
+    // pins path equivalence).
     val cc: DataFrame =
       if (forceDistributed) graft.etl.ConnectedComponents.runStar(edges)
       else graft.etl.ConnectedComponents
@@ -784,9 +782,9 @@ object DedupQueries {
     * name graph — whose similarity function DuckDB shares, already
     * pinned by q_fuzzy_jw_pairs — clustered by transitive closure.
     * The oracle recomputes the SAME clusters with a recursive CTE, so
-    * both the JW edge set and the union-find/min-label component
-    * labeling sit under the hash gate. Nodes without any edge are
-    * outside the report on both sides (the engine joins components,
+    * both the JW edge set and the union-find/star-contraction
+    * component labeling sit under the hash gate. Nodes without any
+    * edge are outside the report on both sides (the engine joins components,
     * which only cover edge-participating vertices). */
   val qErClusters: QDef = QDef(
     "q_er_clusters",

@@ -362,11 +362,10 @@ object GraphQueries {
     * moves; each round is one join(labels, adj) + groupBy(node) MIN —
     * partial-aggregated map-side, shuffling only the |V|-row label
     * vector. The adjacency list and each round's label vector are
-    * localCheckpoint'ed (the ConnectedComponents discipline): an
-    * iterative graph plan otherwise nests every prior round's join
-    * into one deep tree — re-analyzed, re-optimized, and at real
-    * round counts a lineage/stack blowup. Output: the 20 largest
-    * communities. */
+    * localCheckpoint'ed: an iterative graph plan otherwise nests
+    * every prior round's join into one deep tree — re-analyzed,
+    * re-optimized, and at real round counts a lineage/stack blowup.
+    * Output: the 20 largest communities. */
   val qLabelProp: QDef = {
     val rounds = 3
     def iterSql(prev: String, cur: String): String =

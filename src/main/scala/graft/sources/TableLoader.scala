@@ -18,8 +18,9 @@ import graft.plans.DecimalSumRule
   *     cast, so downstream results hash-match.
   *   - '''Session defaults''': UTC session timezone, TIMESTAMP_MICROS
   *     parquet output (so written timestamps round-trip bit-exactly into
-  *     the DuckDB comparator), AQE left on (runtime coalescing + skew
-  *     handling is the first-line answer at 100 TB scale), and
+  *     the DuckDB comparator), AQE at Spark's default, on (runtime
+  *     coalescing + skew handling is the first-line answer at 100 TB
+  *     scale), and
   *     [[graft.plans.DecimalSumRule]] installed, so every SUM of a
   *     DECIMAL(9..18) accumulates exactly in two longs instead of
   *     Spark's BigDecimal buffer (same result, no option to turn off).
@@ -59,8 +60,9 @@ object TableLoader {
     c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // Required to read events.parquet (TIMESTAMP(NANOS) -> LongType).
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Adaptive execution: partition coalescing + skew-join splitting.
-    c.set("spark.sql.adaptive.enabled", "true")
+    // Adaptive execution (partition coalescing + skew-join splitting)
+    // is Spark's default and is not set here, so a session or user
+    // that turns it off keeps it off.
     // Deliberately NO engine-level initialPartitionNum override
     // (measured, r14 optimization round 1): forcing every shuffle to
     // start at 128 map buckets and letting AQE coalesce was 1.4-5.3x

@@ -177,5 +177,12 @@ class DecimalSumSpec extends AnyFunSuite {
     assert(kernels(q.queryExecution.optimizedPlan) == 3)
     assert(DecimalSumRule(q.queryExecution.optimizedPlan) fastEquals
       q.queryExecution.optimizedPlan)
+    // configure leaves AQE where the session put it
+    val aqe = "spark.sql.adaptive.enabled"
+    spark.conf.set(aqe, "false")
+    try {
+      TableLoader.table(spark, TestSpark.fixtures("sf0.001"), "region")
+      assert(spark.conf.get(aqe) == "false")
+    } finally spark.conf.set(aqe, "true")
   }
 }

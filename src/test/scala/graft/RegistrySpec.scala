@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Meta-guards on the driver contract itself: the registry feeds
@@ -39,5 +41,16 @@ class RegistrySpec extends AnyFunSuite {
         assert(q.oracle.get.toUpperCase.contains("ORDER BY"),
           s"${q.name}'s oracle lacks ORDER BY")
       }
+  }
+
+  test("README states the registry's query and oracle counts") {
+    // whitespace and the code block's `//` line prefixes normalised
+    val readme = Files.readString(Paths.get("README.md"))
+      .replaceAll("(?m)^\\s*//", " ").split("\\s+").mkString(" ")
+    val (n, m) = (SparkEntry.registry.size, SparkEntry.oracleSql.size)
+    assert(readme.contains(s"($n declared queries, $m DuckDB-oracle-checked;"))
+    assert(readme.contains(s"the $n-operator query surface"))
+    assert(readme.contains(
+      s"$m of the $n declared operators are DuckDB-oracle-checked"))
   }
 }
