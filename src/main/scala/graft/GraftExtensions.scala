@@ -27,9 +27,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // fires only on the AsOfJoin logical node graft.plans.AsOfJoinOps
     // builds — inert for every other plan
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // same results, exact DECIMAL(9..18) sums on two longs; the
-    // TableLoader.configure install beside it is harmless (idempotent)
+    // same results, exact DECIMAL(9..18) sums on two longs and
+    // double→DECIMAL(p≤18) casts on a long; the TableLoader.configure
+    // install beside them is harmless (idempotent)
     e.injectOptimizerRule(_ => graft.plans.DecimalSumRule)
+    e.injectOptimizerRule(_ => graft.plans.DoubleDecimalCastRule)
   }
 }
 

@@ -91,7 +91,7 @@ case class LongPairDecimalSum(child: Expression)
   override lazy val updateExpressions: Seq[Expression] = {
     // A NULL adds 0. No If around the input: codegen shares a
     // subexpression only where it is always evaluated, and inside If
-    // branches the input (a double→decimal Cast, say) ran per use.
+    // branches the input (a DoubleToDecimal, say) ran once per use.
     val u =
       if (child.nullable) Coalesce(Seq(UnscaledValue(child), Literal(0L)))
       else UnscaledValue(child)

@@ -28,11 +28,13 @@ object AggQueries {
     * cast to DOUBLE on BOTH engines: decimal→double is correctly rounded
     * in Spark and DuckDB alike, whereas DECIMAL *outputs* render
     * differently per reader in the driver's hash compare (the round-1
-    * 15-query failure cluster — values identical, hashes not). The
-    * three DECIMAL(18,s) sums run on [[graft.functions.LongPairDecimalSum]]
-    * (two longs per group, installed by `TableLoader.configure`), not
-    * on Spark's BigDecimal DECIMAL(28,s) buffer: the same decimals, at
-    * a fraction of the per-row cost.
+    * 15-query failure cluster — values identical, hashes not). Both
+    * halves of each exact sum run on longs, through rules that
+    * `TableLoader.configure` installs: the three double→DECIMAL(18,s)
+    * casts on [[graft.functions.DoubleToDecimal]] (no BigDecimal per
+    * row) and the three sums on [[graft.functions.LongPairDecimalSum]]
+    * (two longs per group, not Spark's BigDecimal DECIMAL(28,s)
+    * buffer). The decimals are the same as Spark's own.
     */
   val qAggBasic: QDef = QDef(
     "q_agg_basic",

@@ -694,7 +694,9 @@ object PipelineExtQueries {
     * joins break on missing rows). The spine generates from the min/max
     * bounds (one tiny aggregate) and LEFT-joins the per-day rollup —
     * the complement of q_fill_forward (which fills null VALUES, not
-    * missing ROWS). Spine size is calendar-bounded: broadcast. */
+    * missing ROWS). Both sides are calendar-bounded. The spine is the
+    * preserved side of the LEFT join, so it cannot be the broadcast
+    * build side (Spark drops such a hint); the rollup can be. */
   val qTimeGapfill: QDef = QDef(
     "q_time_gapfill",
     """WITH b AS (
@@ -726,7 +728,7 @@ object PipelineExtQueries {
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double")
           .as("sum_value"))
-    broadcast(spine).join(agg, Seq("day"), "left")
+    spine.join(agg, Seq("day"), "left")
       .select(
         col("day"), coalesce(col("n"), lit(0L)).as("n"),
         round(coalesce(col("sum_value"), lit(0.0)), 4).as("sum_value"))

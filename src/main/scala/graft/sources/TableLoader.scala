@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.plans.DecimalSumRule
+import graft.plans.{DecimalSumRule, DoubleDecimalCastRule}
 
 /** Central table loader for the testdata star schema + extension tables.
   *
@@ -23,7 +23,10 @@ import graft.plans.DecimalSumRule
   *     scale), and
   *     [[graft.plans.DecimalSumRule]] installed, so every SUM of a
   *     DECIMAL(9..18) accumulates exactly in two longs instead of
-  *     Spark's BigDecimal buffer (same result, no option to turn off).
+  *     Spark's BigDecimal buffer, and
+  *     [[graft.plans.DoubleDecimalCastRule]], so a double→DECIMAL(p≤18)
+  *     cast rounds on a long instead of a BigDecimal (same results, no
+  *     option to turn either off).
   *   - '''Plan memoization, NOT data caching''': per (session, sfDir,
   *     table) the loaded DataFrame object is memoized, so a multi-query
   *     run (Verify / Bench) lists files and reads parquet footers once.
@@ -77,11 +80,15 @@ object TableLoader {
     // deployment); the engine keeps AQE on so whatever width the
     // submit chooses is coalesced per-stage by actual bytes.
     // Exact DECIMAL(9-18) sums on two longs instead of a BigDecimal
-    // buffer (graft.plans.DecimalSumRule); added once per session.
+    // buffer (graft.plans.DecimalSumRule), and double→DECIMAL(p≤18)
+    // casts on a long (graft.plans.DoubleDecimalCastRule); each added
+    // once per session.
     val x = spark.experimental
     x.synchronized {
-      if (!x.extraOptimizations.contains(DecimalSumRule))
-        x.extraOptimizations = x.extraOptimizations :+ DecimalSumRule
+      Seq(DecimalSumRule, DoubleDecimalCastRule).foreach { r =>
+        if (!x.extraOptimizations.contains(r))
+          x.extraOptimizations = x.extraOptimizations :+ r
+      }
     }
   }
 

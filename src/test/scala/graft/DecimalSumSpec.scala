@@ -4,17 +4,18 @@ import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, EvalMode, NumericEvalContext}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Cast, EvalMode, NumericEvalContext}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.debug.codegenString
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.LongPairDecimalSum
-import graft.plans.DecimalSumRule
+import graft.functions.{DoubleToDecimal, LongPairDecimalSum}
+import graft.plans.{DecimalSumRule, DoubleDecimalCastRule}
 import graft.sources.TableLoader
 
 /** `DecimalSumRule` + `LongPairDecimalSum`: every result equals stock
@@ -172,11 +173,26 @@ class DecimalSumSpec extends AnyFunSuite {
   test("every query path installs the rule once; q_agg_basic uses it") {
     TableLoader.configure(spark)
     TableLoader.configure(spark)
-    assert(spark.experimental.extraOptimizations.count(_ == DecimalSumRule) == 1)
+    Seq(DecimalSumRule, DoubleDecimalCastRule).foreach { r =>
+      assert(spark.experimental.extraOptimizations.count(_ == r) == 1)
+    }
     val q = SparkEntry.queries("q_agg_basic")(spark, TestSpark.fixtures("sf0.001"))
-    assert(kernels(q.queryExecution.optimizedPlan) == 3)
-    assert(DecimalSumRule(q.queryExecution.optimizedPlan) fastEquals
-      q.queryExecution.optimizedPlan)
+    val optimized = q.queryExecution.optimizedPlan
+    assert(kernels(optimized) == 3)
+    assert(DecimalSumRule(optimized) fastEquals optimized)
+    // its three double→decimal casts run on a long, not a BigDecimal
+    val casts = optimized.collect { case n => n.expressions.flatMap(_.collect {
+      case c: DoubleToDecimal => c
+      case c @ Cast(child, _: DecimalType, _, _) if child.dataType == DoubleType => c
+    }) }.flatten
+    assert(casts.size == 3 && casts.forall(_.isInstanceOf[DoubleToDecimal]),
+      casts)
+    q.collect()
+    val generated = codegenString(q.queryExecution.executedPlan)
+    assert(generated.contains("DoubleToDecimal.cast("))
+    // Spark's cast builds `Decimal.apply(scala.math.BigDecimal.valueOf(d))`
+    // per row; ROUND's java.math.BigDecimal.valueOf runs once per group
+    assert(!generated.contains("scala.math.BigDecimal.valueOf"))
     // configure leaves AQE where the session put it
     val aqe = "spark.sql.adaptive.enabled"
     spark.conf.set(aqe, "false")

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SkewJoin
+import graft.plans.{DecimalSumRule, DoubleDecimalCastRule}
 import graft.sources.TableLoader
 
 /** SQL-front-end registration of the custom expressions + the salted
@@ -21,6 +23,18 @@ class ExtensionsSpec extends AnyFunSuite {
         |    AS c""".stripMargin).collect()(0)
     assert(r.getDouble(0) == 11.0)
     assert(r.getInt(1) == 2)
+  }
+
+  test("GraftExtensions injects the decimal sum and cast rules") {
+    val e = new SparkSessionExtensions
+    new GraftExtensions().apply(e)
+    // buildOptimizerRules is package-private in Scala, public in bytecode
+    val rules = classOf[SparkSessionExtensions]
+      .getMethod("buildOptimizerRules", classOf[SparkSession])
+      .invoke(e, spark).asInstanceOf[Seq[AnyRef]]
+    Seq(DecimalSumRule, DoubleDecimalCastRule).foreach { r =>
+      assert(rules.count(_ eq r) == 1, rules)
+    }
   }
 
   test("topk aggregate is callable from SQL") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint, UnaryNode}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *      grain fails here until it is either re-shaped (see
   *      q_rfm_segments' banded exact-rank pattern) or consciously
   *      whitelisted with its boundedness argument.
+  *   3. Ignored hints: a broadcast hint on the side of an outer join
+  *      that the join preserves is dropped by Spark with a warning.
   */
 class RegistryPlanSpec extends AnyFunSuite {
 
@@ -113,6 +117,31 @@ class RegistryPlanSpec extends AnyFunSuite {
     }
     assert(failures.isEmpty,
       s"queries failing to plan:\n  ${failures.mkString("\n  ")}")
+  }
+
+  test("no query hints a broadcast on the preserved side of an outer join") {
+    // Spark ignores such a hint with a warning: the preserved side
+    // cannot be the build side. A Join takes the hints its optimizer
+    // (EliminateResolvedHint) pulls up through each side's unary nodes.
+    def broadcastHinted(side: LogicalPlan): Boolean = side match {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => true
+      case u: UnaryNode => broadcastHinted(u.child)
+      case _ => false
+    }
+    val offenders = SparkEntry.registry.flatMap { q =>
+      val joins =
+        try SparkEntry.queries(q.name)(spark, sfDir).queryExecution.analyzed
+          .collectWithSubqueries { case j: Join => j }
+        catch { case _: Throwable => Nil } // planning failures: test 1
+      joins.filter(j => j.joinType match {
+        case LeftOuter => broadcastHinted(j.left)
+        case RightOuter => broadcastHinted(j.right)
+        case FullOuter => broadcastHinted(j.left) || broadcastHinted(j.right)
+        case _ => false
+      }).map(j => s"${q.name} (${j.joinType.sql})")
+    }
+    assert(offenders.isEmpty,
+      s"ignored broadcast hints: ${offenders.distinct.mkString(", ")}")
   }
 
   test("unpartitioned windows only appear in audited bounded-grain queries") {
