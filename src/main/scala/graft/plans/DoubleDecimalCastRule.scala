@@ -15,7 +15,11 @@ import graft.functions.DoubleToDecimal
   * for nearly every input. These casts feed every
   * `sum(x.cast("decimal(18,s)"))`, the engine's exact totals.
   *
-  * Left alone: FLOAT inputs, p ≥ 19, and non-ANSI and TRY casts.
+  * Left alone: FLOAT inputs, p ≥ 19, non-ANSI and TRY casts, and the
+  * casts an INSERT adds to fit a table's columns. Spark tags those
+  * `Cast.BY_TABLE_INSERTION` and wraps them in
+  * `CheckOverflowInTableInsert`, whose error (CAST_OVERFLOW_IN_TABLE_INSERT)
+  * needs its child to stay a `Cast`.
   * Installed beside [[DecimalSumRule]] (`TableLoader.configure` and
   * [[graft.GraftExtensions]]); applying it twice changes nothing.
   */
@@ -25,7 +29,8 @@ object DoubleDecimalCastRule extends Rule[LogicalPlan] {
     plan.transformAllExpressionsWithPruning(_.containsPattern(CAST)) {
       case c @ Cast(child, d: DecimalType, _, EvalMode.ANSI)
           if child.dataType == DoubleType &&
-            d.precision <= Decimal.MAX_LONG_DIGITS && d.scale >= 0 =>
+            d.precision <= Decimal.MAX_LONG_DIGITS && d.scale >= 0 &&
+            c.getTagValue(Cast.BY_TABLE_INSERTION).isEmpty =>
         CurrentOrigin.withOrigin(c.origin)(DoubleToDecimal(child, d))
     }
 }

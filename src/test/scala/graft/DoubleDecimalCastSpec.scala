@@ -182,4 +182,42 @@ class DoubleDecimalCastSpec extends AnyFunSuite {
     assert(onErr.contains("NUMERIC_VALUE_OUT_OF_RANGE") &&
       onErr.contains("CAST(d AS DECIMAL(9,2))"), onErr)
   }
+
+  test("an INSERT of doubles into a DECIMAL(9,2) column keeps Spark's rows and error") {
+    // an INSERT runs when spark.sql returns, so the rule is set first
+    def withRule[T](on: Boolean)(f: => T): T = {
+      val x = spark.experimental
+      val saved = x.extraOptimizations
+      val others = saved.filterNot(_ == DoubleDecimalCastRule)
+      try {
+        x.extraOptimizations = if (on) others :+ DoubleDecimalCastRule else others
+        f
+      } finally x.extraOptimizations = saved
+    }
+    def insert(on: Boolean, values: Seq[Double]): Either[String, Seq[Row]] = {
+      spark.sql("DROP TABLE IF EXISTS ddc_ins")
+      spark.sql("CREATE TABLE ddc_ins (x DECIMAL(9,2)) USING parquet")
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(values.map(Row(_)), 2),
+        StructType(Seq(StructField("d", DoubleType))))
+        .createOrReplaceTempView("ddc_ins_src")
+      try withRule(on) {
+        spark.sql("INSERT INTO ddc_ins SELECT d FROM ddc_ins_src")
+        Right(spark.table("ddc_ins").orderBy("x").collect().toSeq)
+      } catch {
+        case e: Throwable =>
+          val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .find(_.isInstanceOf[SparkThrowable]).getOrElse(e)
+          Left(describe(root))
+      } finally spark.sql("DROP TABLE IF EXISTS ddc_ins")
+    }
+    val inRange = Seq(1.005, 2.675, -0.125, 9999999.994)
+    val rows = insert(on = true, inRange)
+    assert(rows == insert(on = false, inRange))
+    assert(rows.map(_.map(_.getDecimal(0).toPlainString)) ==
+      Right(Seq("-0.13", "1.01", "2.68", "9999999.99")))
+    val err = insert(on = true, Seq(1.5, 9999999.995))
+    assert(err == insert(on = false, Seq(1.5, 9999999.995)))
+    assert(err.left.exists(_.contains("CAST_OVERFLOW_IN_TABLE_INSERT")), err)
+  }
 }
