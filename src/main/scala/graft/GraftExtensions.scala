@@ -21,9 +21,6 @@ import graft.functions.{DotProduct, SortedIntersectCount}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptions.foreach(e.injectFunction)
-    // conf-gated (spark.graft.rangeJoin.binWidth): a no-op until the
-    // user opts in, so injection is always safe
-    e.injectOptimizerRule(_ => graft.plans.BinnedRangeJoinRule)
     // fires only on the AsOfJoin logical node graft.plans.AsOfJoinOps
     // builds — inert for every other plan
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

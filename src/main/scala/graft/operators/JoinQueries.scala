@@ -516,9 +516,10 @@ object JoinQueries {
     * orders), with the overlap length. The equi key (custkey) carries
     * the hash join; the overlap predicate `a.lo <= b.hi AND b.lo <=
     * a.hi` rides as a residual filter — so the pair space is bounded
-    * per key, never a global interval cross-product (the keyless
-    * variant is what BinnedRangeJoinRule exists for). `a < b` on the
-    * unique orderkey halves the pairs and makes the output total. */
+    * per key, never a global interval cross-product (a keyless
+    * point-in-interval join goes through
+    * `RangeJoin.binnedPointInterval` instead). `a < b` on the unique
+    * orderkey halves the pairs and makes the output total. */
   val qJoinIntervalOverlap: QDef = QDef(
     "q_join_interval_overlap",
     """WITH o AS (

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Arbitrary per-key state machines on the typed Dataset API
   * (SURVEY.md §2.8 "stateful custom" row).
@@ -40,9 +40,8 @@ object StatefulOps {
     * fold exact for totals up to 2^63 cents. */
   final case class SumState(totalCents: Long)
 
-  /** Shared sort-and-fold body of both operators (r11 review: it was
-    * duplicated verbatim, so a fix applied to one silently broke the
-    * StatefulTwsSpec parity with the other).
+  /** Sorts one key's rows of one batch and folds them onto the carried
+    * total.
     *
     * Ordering matches the batch twin's ORDER BY ts, event_id:
     * Timestamp compares as a value (nanosecond-aware — `getTime`
@@ -89,59 +88,4 @@ object StatefulOps {
           out.iterator
         })
   }
-
-  /** `transformWithState` processor computing the same per-user running
-    * total — the Spark 4 successor API to flatMapGroupsWithState.
-    *
-    * Differences that matter at scale: state is named and composable
-    * (multiple ValueState/ListState/MapState per key instead of one
-    * blob), TTL is first-class (`TTLConfig`), and the operator requires
-    * the RocksDB state store provider — the large-keyspace answer
-    * (SURVEY §4.3): state lives off-heap/on-disk per executor instead of
-    * in the JVM heap.
-    */
-  private class RunningTotalProcessor(ttl: Option[java.time.Duration])
-      extends StatefulProcessor[Long, Ev, Running] {
-    @transient private var state: ValueState[SumState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SumState](
-        "runningTotal", Encoders.product[SumState],
-        ttl.map(org.apache.spark.sql.streaming.TTLConfig.apply)
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
-
-    override def handleInputRows(
-        user: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[Running] = {
-      // single state-store point read (exists()+get() doubled it)
-      val start = Option(state.get()).map(_.totalCents).getOrElse(0L)
-      val (total, out) = StatefulOps.foldRunning(user, start, rows)
-      state.update(SumState(total))
-      out.iterator
-    }
-  }
-
-  /** transformWithState twin of [[runningTotals]] (same fixture, same
-    * output — asserted against the legacy API in StatefulTwsSpec).
-    * Caller must have the RocksDB provider configured
-    * ([[StreamOps.configureRocksDBStateStore]]); the operator rejects
-    * the default HDFS-backed provider.
-    *
-    * `stateTtl`: evict a key's state this long after its last update —
-    * the unbounded-keyspace lever the new API makes first-class (an
-    * evicted user restarts its prefix at 0, the right trade for
-    * churned-out keys). None (default) keeps state forever, matching
-    * the legacy twin. */
-  def runningTotalsTws(
-      events: Dataset[Ev],
-      stateTtl: Option[java.time.Duration] = None): Dataset[Running] =
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(
-        new RunningTotalProcessor(stateTtl),
-        // TTL eviction clocks on processing time — the mode is
-        // required whenever a TTL is set
-        if (stateTtl.isDefined) TimeMode.ProcessingTime()
-        else TimeMode.None(),
-        OutputMode.Append())(Encoders.product[Running])
 }

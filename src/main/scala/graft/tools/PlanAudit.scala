@@ -15,9 +15,9 @@ import org.apache.spark.sql.execution.window.WindowExec
   * (column pruning, filter pushdown), then turns the findings into a
   * ranked risk list.
   *
-  * This is the library form of what RegistryPlanSpec/PlanSpec assert
-  * suite-wide — exposed so a USER of the engine can gate their own
-  * queries the same way (`PlanAudit.of(df).risks` in a CI check).
+  * RegistryPlanSpec's registry-wide sweeps read it, and a USER of the
+  * engine can gate their own queries the same way
+  * (`PlanAudit.of(df).risks` in a CI check).
   */
 final case class ScanInfo(
     source: String,
@@ -80,7 +80,7 @@ object PlanAudit {
 
   /** Audit the STATIC physical plan (AQE disabled during planning so
     * exchanges and join strategies are visible, not wrapped in opaque
-    * query stages — the same inspection mode RegistryPlanSpec uses).
+    * query stages), then restore the session's earlier AQE setting.
     *
     * Always RE-PLANS from the logical plan: `executedPlan` is a
     * memoized lazy val, so on a DataFrame that has already run an

@@ -508,9 +508,17 @@ class JetSqlSpec extends AnyFunSuite {
         "IIf(\"Ax-xy\" LIKE \"A#-*\", 1, 0) AS e, " +
         "IIf(\"a.(v)\" LIKE \"[!a-c].(v)\", 1, 0) AS f, " +
         "IIf(\"z.(v)\" LIKE \"[!a-c].(v)\", 1, 0) AS g, " +
-        "IIf(\"Smith!\" NOT LIKE \"Sm[iy]th\", 1, 0) AS h"))
+        "IIf(\"Smith!\" NOT LIKE \"Sm[iy]th\", 1, 0) AS h, " +
+        // ? is exactly one character, on the LIKE and the RLIKE path
+        "IIf(\"Smith\" LIKE \"Sm?th\", 1, 0) AS i, " +
+        "IIf(\"Smth\" LIKE \"Sm?th\", 1, 0) AS j, " +
+        "IIf(\"Snoth\" LIKE \"S[mn]?th\", 1, 0) AS k, " +
+        // Switch with no true arm is NULL, not a default
+        "Switch(1 > 2, 1, 1 > 3, 2) AS l"))
       .collect()(0)
-    assert((0 to 7).map(r.getInt) == Seq(1, 1, 0, 1, 0, 0, 1, 1))
+    assert((0 to 10).map(r.getInt) ==
+      Seq(1, 1, 0, 1, 0, 0, 1, 1, 1, 0, 1))
+    assert(r.isNullAt(11))
     // JDBC target: regex operators are dialect-specific → still loud
     val e = intercept[IllegalArgumentException] {
       graft.sources.JetSql.translateForJdbc(

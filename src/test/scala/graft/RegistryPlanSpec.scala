@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, ResolvedHint, UnaryNode}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.PlanAudit
 
 /** Registry-wide physical-plan sweeps (every DECLARED query, including
   * the no-oracle ones GoldenParitySpec never builds):
@@ -26,20 +26,26 @@ import org.scalatest.funsuite.AnyFunSuite
   *      whitelisted with its boundedness argument.
   *   3. Ignored hints: a broadcast hint on the side of an outer join
   *      that the join preserves is dropped by Spark with a warning.
+  *
+  * Each query is built once; all three sweeps read that one build.
   */
 class RegistryPlanSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val spark = TestSpark.session
 
-  /** Static physical plan, AQE disabled for inspection (adaptive wraps
-    * stages in opaque QueryStageExec leaves). */
-  private def staticPlan(name: String): SparkPlan = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  /** Every declared query by name, with its analyzed plan and the
+    * audit of its static physical plan (`PlanAudit.of` plans with AQE
+    * off, which would otherwise wrap stages in opaque QueryStageExec
+    * leaves), or the error that stopped building or planning it. */
+  private lazy val planned
+      : Seq[(String, Either[Throwable, (LogicalPlan, PlanAudit)])] =
+    SparkEntry.registry.map { q =>
+      q.name -> (try {
+        val df = SparkEntry.queries(q.name)(spark, sfDir)
+        Right((df.queryExecution.analyzed, PlanAudit.of(df)))
+      } catch { case e: Throwable => Left(e) })
+    }
 
   /** Queries audited to run their unpartitioned window over a BOUNDED
     * grain. Grouped by what bounds the serial stage's input. */
@@ -108,12 +114,8 @@ class RegistryPlanSpec extends AnyFunSuite {
       "q_jet_top_ties")
 
   test("every declared query resolves and physically plans") {
-    val failures = SparkEntry.registry.flatMap { q =>
-      try { staticPlan(q.name); None }
-      catch {
-        case e: Throwable =>
-          Some(s"${q.name}: ${e.getClass.getSimpleName} ${e.getMessage}")
-      }
+    val failures = planned.collect { case (name, Left(e)) =>
+      s"$name: ${e.getClass.getSimpleName} ${e.getMessage}"
     }
     assert(failures.isEmpty,
       s"queries failing to plan:\n  ${failures.mkString("\n  ")}")
@@ -128,36 +130,32 @@ class RegistryPlanSpec extends AnyFunSuite {
       case u: UnaryNode => broadcastHinted(u.child)
       case _ => false
     }
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val joins =
-        try SparkEntry.queries(q.name)(spark, sfDir).queryExecution.analyzed
-          .collectWithSubqueries { case j: Join => j }
-        catch { case _: Throwable => Nil } // planning failures: test 1
-      joins.filter(j => j.joinType match {
-        case LeftOuter => broadcastHinted(j.left)
-        case RightOuter => broadcastHinted(j.right)
-        case FullOuter => broadcastHinted(j.left) || broadcastHinted(j.right)
-        case _ => false
-      }).map(j => s"${q.name} (${j.joinType.sql})")
+    val offenders = planned.flatMap {
+      case (name, Right((analyzed, _))) =>
+        analyzed.collectWithSubqueries { case j: Join => j }
+          .filter(j => j.joinType match {
+            case LeftOuter => broadcastHinted(j.left)
+            case RightOuter => broadcastHinted(j.right)
+            case FullOuter =>
+              broadcastHinted(j.left) || broadcastHinted(j.right)
+            case _ => false
+          }).map(j => s"$name (${j.joinType.sql})")
+      case _ => Nil // planning failures: test 1
     }
     assert(offenders.isEmpty,
       s"ignored broadcast hints: ${offenders.distinct.mkString(", ")}")
   }
 
   test("unpartitioned windows only appear in audited bounded-grain queries") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val unpart =
-        try staticPlan(q.name).collectWithSubqueries {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        catch { case _: Throwable => Nil } // planning failures: test 1
-      // no structural exemptions: EVERY unpartitioned window must be
-      // on the explicit whitelist with its boundedness argument (the
-      // earlier __-prefix column-name escape hatch let any future
-      // global window dodge the audit by naming convention)
-      if (unpart.nonEmpty && !boundedWindowWhitelist(q.name))
-        Some(q.name)
-      else None
+    // no structural exemptions: EVERY unpartitioned window must be
+    // on the explicit whitelist with its boundedness argument (the
+    // earlier __-prefix column-name escape hatch let any future
+    // global window dodge the audit by naming convention); planning
+    // failures are test 1's
+    val offenders = planned.collect {
+      case (name, Right((_, audit)))
+          if audit.unpartitionedWindows > 0 &&
+            !boundedWindowWhitelist(name) => name
     }
     assert(offenders.isEmpty,
       "unpartitioned WindowExec outside the audited whitelist " +

@@ -9,11 +9,13 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TableLoader
-import graft.streaming.StatefulOps
+import graft.streaming.{StatefulOps, StreamOps}
 
 /** Structured Streaming semantics (SURVEY.md §2.8 prose rows + §5.4):
   * batch/stream parity for the window queries, watermark late-data
-  * dropping, session-gap boundary rule, and stateful running totals.
+  * dropping, session-gap boundary rule, stateful running totals, and
+  * the same stateful results under the HDFS-backed and RocksDB state
+  * store providers (SURVEY §4.3's large-keyspace configuration).
   */
 class StreamingSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
@@ -233,5 +235,59 @@ class StreamingSpec extends AnyFunSuite {
     val out = spark.table("state_out").orderBy($"event_id")
       .as[StatefulOps.Running].collect().toSeq
     assert(out.map(_.running) == Seq(1.5, 3.5)) // state carried: 1.5+2.0
+  }
+
+  test("windowed aggregation matches under HDFS-backed and RocksDB " +
+    "state stores") {
+    def windowed(name: String): Seq[Row] = {
+      implicit val ctx = spark.sqlContext
+      val stream = MemoryStream[(Timestamp, String, Double)]
+      val q = StreamOps
+        .tumblingCounts(stream.toDF().toDF("ts", "event_type", "value"))
+        .writeStream.outputMode(OutputMode.Complete)
+        .format("memory").queryName(name).start()
+      try {
+        stream.addData(
+          (ts("2024-03-01 00:10:00"), "click", 1.0),
+          (ts("2024-03-01 00:40:00"), "click", 2.5),
+          (ts("2024-03-01 01:10:00"), "view", 4.0))
+        q.processAllAvailable()
+        stream.addData((ts("2024-03-01 00:55:00"), "click", 3.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).orderBy($"w", $"event_type").collect().toSeq
+    }
+    // runningTotals over two micro-batches: each key's second batch
+    // folds onto the total its first batch left in the state store
+    def running(name: String): Seq[StatefulOps.Running] = {
+      implicit val ctx = spark.sqlContext
+      val stream = MemoryStream[StatefulOps.Ev]
+      val q = StatefulOps.runningTotals(stream.toDS())
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(name).start()
+      try {
+        stream.addData(
+          StatefulOps.Ev(1, ts("2024-03-01 00:00:00"), 7, 1.5),
+          StatefulOps.Ev(3, ts("2024-03-01 00:02:00"), 9, 4.0))
+        q.processAllAvailable()
+        stream.addData(
+          StatefulOps.Ev(2, ts("2024-03-01 00:01:00"), 7, 2.0),
+          StatefulOps.Ev(4, ts("2024-03-01 00:03:00"), 9, 0.5))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).orderBy($"user_id", $"event_id")
+        .as[StatefulOps.Running].collect().toSeq
+    }
+    val (hdfsWin, hdfsRun) = (windowed("win_hdfs"), running("run_hdfs"))
+    val restore = StreamOps.configureRocksDBStateStore(spark)
+    val (rocksWin, rocksRun) =
+      try (windowed("win_rocks"), running("run_rocks")) finally restore()
+    assert(hdfsWin == rocksWin)
+    assert(hdfsWin.nonEmpty)
+    // user 7: 1.5 then 1.5+2.0; user 9: 4.0 then 4.0+0.5
+    assert(hdfsRun == Seq(
+      StatefulOps.Running(7, 1, 1.5), StatefulOps.Running(7, 2, 3.5),
+      StatefulOps.Running(9, 3, 4.0), StatefulOps.Running(9, 4, 4.5)))
+    assert(rocksRun == hdfsRun)
   }
 }
