@@ -1,52 +1,34 @@
 package graft.sources.jetmdb
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.{CharacterCodingException, Charset}
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.jetmdb.JetMdbFormat._
 
-/** Jet3 (Access 97) WRITE path — `df.write.format("jetmdb")
+/** Jet3 (Access 97) WRITE policy — `df.write.format("jetmdb")
   * .option("table", t).option("version", "jet3").save(path)` emits a
-  * 2048-byte-page Jet3 database in exactly the documented profile
-  * [[Jet3Format]] reads (and the independent test-side fixture writer
+  * 2048-byte-page Jet3 database through the shared writer
+  * ([[JetMdbWrite]]) over [[JetLayout.Jet3]], in exactly the profile
+  * the reader parses (and the independent test-side fixture writer
   * emits), closing the round-9 asymmetry of a migration tool that
-  * READS Access 97 but could only re-export Jet4.
-  *
-  * Same topology as the Jet4 writer ([[JetMdbWrite]]): tasks stage
-  * encoded row blobs in parallel, the driver's commit streams pages.
-  * Differences are the format's own:
-  *   - header version byte 0x00; 2048-byte pages; 1 GB cap (Jet3's
-  *     own database limit, half of Jet4's);
-  *   - TDEF: Jet3 field offsets (num_rows @12, type @20, counts
-  *     @21/23/25), 18-byte column descriptors, u8-length CP1252
-  *     column names;
-  *   - data page: owner u32 @4, row count u16 @8, offsets from @10;
-  *   - row: u8 column count, u8 var-offset table — the ≤255-byte row
-  *     profile (longer rows use Jet3's jump-table extension, out of
-  *     profile on BOTH sides: the reader rejects them too);
-  *   - text is single-byte CP1252 (Jet3 predates the UCS-2 switch):
-  *     a value with characters outside CP1252 REJECTS with the
-  *     column named — transcoding lossily would corrupt a migration.
+  * READS Access 97 but could only re-export Jet4. This object holds
+  * only what is Jet3 policy rather than geometry: the type profile,
+  * the CP1252 text check and the scope rejections.
   *
   * Honest scope rejections (each names its escape route): MEMO/OLE
   * columns (this writer emits no long-value pages; the Jet3 READER
-  * accepts both) and NUMERIC (postdates Jet3), index/relationship/
-  * autonumber
-  * metadata (the Jet3 reader skips index sections, so round-tripping
-  * them is unverifiable — write Jet4 for metadata-bearing exports),
-  * and BIGINT as in Jet4 (Jet has no 64-bit integer).
+  * accepts both), NUMERIC (postdates Jet3), index/relationship/
+  * autonumber metadata (the Jet3 reader skips index sections, so
+  * round-tripping them is unverifiable — write Jet4 for
+  * metadata-bearing exports), BIGINT as in Jet4 (Jet has no 64-bit
+  * integer), text outside CP1252, rows over the 255-byte row form,
+  * and schemas whose TDEF does not fit one 2048-byte page.
   */
 object Jet3Write {
 
-  import Jet3Format.{PageSize => P3}
-
   private val cp1252: Charset = Charset.forName("windows-1252")
-
-  /** Jet3's own 1 GB database cap, in 2048-byte pages. */
-  val MaxPages3: Int = (1L * 1024 * 1024 * 1024 / P3).toInt
 
   /** Spark type → Jet3 column code (plan-time total-or-throw; the
     * Jet3 profile has no MEMO/OLE/NUMERIC/GUID). */
@@ -73,18 +55,28 @@ object Jet3Write {
         "array/struct need the parquet sink)")
   }
 
-  def fixedLen3(code: Int): Int = code match {
-    case T_BOOL => 0
-    case T_INT => 2
-    case T_LONG => 4
-    case T_MONEY => 8
-    case T_FLOAT => 4
-    case T_DOUBLE => 8
-    case T_DATETIME => 8
-    case _ => 0
+  /** The column codes of a Jet3 write, after its plan-time scope
+    * checks: no MEMO columns, no index/relationship/autonumber
+    * metadata (the reader skips those sections, so a write could not
+    * be verified), the Jet3 type profile, and a TDEF that fits one
+    * page (the names are checked against CP1252 on the way). */
+  def codes(
+      schema: StructType, options: CaseInsensitiveStringMap,
+      memoCols: Set[String]): Array[Int] = {
+    require(memoCols.isEmpty,
+      "jetmdb/jet3: memoColumns — Jet3 MEMO uses long-value " +
+        "pointer forms outside the documented profile; write Jet4")
+    Seq("indexes", "relationships", "autonumber").foreach { opt =>
+      require(options.get(opt) == null,
+        s"jetmdb/jet3: .option(\"$opt\", …) — the Jet3 profile " +
+          "carries no index/relationship metadata (its reader " +
+          "skips those sections, so a write could not be " +
+          "verified); write Jet4 for metadata-bearing exports")
+    }
+    val codes = schema.fields.map(jetCode3)
+    JetMdbWrite.tdefPage(JetLayout.Jet3, schema, codes, 0, system = false)
+    codes
   }
-
-  private def isVar3(code: Int): Boolean = code == T_TEXT
 
   /** CP1252 bytes, or a LOUD rejection — Jet3 text is single-byte and
     * silently transcoding '�' into a migration corrupts it. */
@@ -101,287 +93,4 @@ object Jet3Write {
             "characters outside CP1252 (Jet3 text is single-byte) — " +
             "write Jet4 for Unicode text")
     }
-
-  /** Encode one InternalRow per the Jet3 row profile (the exact
-    * inverse of [[Jet3Format.decodeRow]]): u8 column count, fixed
-    * region in declaration order, var data, u8 ascending var-offset
-    * table + u8 var count, null bitmask last. ≤255 bytes or reject. */
-  def encodeRow3(
-      row: InternalRow, schema: StructType, codes: Array[Int])
-      : Array[Byte] = {
-    val nCols = codes.length
-    require(nCols <= 255, "jetmdb/jet3: more than 255 columns")
-    val bitmaskSz = (nCols + 7) / 8
-    val fixedTotal = codes.map(fixedLen3).sum
-    val varIdxs = codes.indices.filter(i => isVar3(codes(i)))
-    val varBytes: Seq[Array[Byte]] = varIdxs.map { i =>
-      if (row.isNullAt(i)) Array.emptyByteArray
-      else encodeText3(row.getUTF8String(i).toString, schema(i).name)
-    }
-    val hasVar = varIdxs.nonEmpty
-    val total = 1 + fixedTotal + varBytes.map(_.length).sum +
-      (if (hasVar) (varIdxs.length + 1) + 1 else 0) + bitmaskSz
-    if (total > 255)
-      throw new java.io.IOException(
-        s"jetmdb/jet3: row of $total bytes exceeds the 255-byte " +
-          "u8-offset row form (Jet3's longer-row jump table is out " +
-          "of profile) — shorten text columns " +
-          varIdxs.map(schema(_).name).mkString("(", ", ", ")") +
-          " or write Jet4")
-    val r = new Array[Byte](total)
-    val b = ByteBuffer.wrap(r).order(ByteOrder.LITTLE_ENDIAN)
-    r(0) = nCols.toByte
-    val mask = new Array[Byte](bitmaskSz)
-    def setBit(i: Int): Unit =
-      mask(i / 8) = (mask(i / 8) | (1 << (i % 8))).toByte
-    var off = 1
-    var i = 0
-    while (i < nCols) {
-      val code = codes(i)
-      if (code == T_BOOL) {
-        // bool can't be null in Jet: null writes as false
-        if (!row.isNullAt(i) && row.getBoolean(i)) setBit(i)
-      } else if (!isVar3(code)) {
-        if (!row.isNullAt(i)) {
-          setBit(i)
-          code match {
-            case T_INT => b.putShort(off, row.getShort(i))
-            case T_LONG => b.putInt(off, row.getInt(i))
-            case T_MONEY => b.putLong(off,
-              row.getDecimal(i, 19, 4).toJavaBigDecimal
-                .movePointRight(4).longValueExact())
-            case T_FLOAT => b.putFloat(off, row.getFloat(i))
-            case T_DOUBLE => b.putDouble(off, row.getDouble(i))
-            case T_DATETIME =>
-              b.putDouble(off, microsToOleDate(row.getLong(i)))
-          }
-        }
-        off += fixedLen3(code)
-      }
-      i += 1
-    }
-    var vOff = 1 + fixedTotal
-    val varOffsets = new Array[Int](varIdxs.length + 1)
-    varIdxs.zipWithIndex.foreach { case (ci, vi) =>
-      varOffsets(vi) = vOff
-      val bytes = varBytes(vi)
-      System.arraycopy(bytes, 0, r, vOff, bytes.length)
-      vOff += bytes.length
-      if (!row.isNullAt(ci)) setBit(ci)
-    }
-    val tail = total - bitmaskSz
-    if (hasVar) {
-      varOffsets(varIdxs.length) = vOff
-      r(tail - 1) = varIdxs.length.toByte
-      val tabOff = tail - 1 - (varIdxs.length + 1)
-      varOffsets.zipWithIndex.foreach { case (o, k) =>
-        r(tabOff + k) = o.toByte
-      }
-    }
-    System.arraycopy(mask, 0, r, tail, bitmaskSz)
-    r
-  }
-
-  /** Jet3 TDEF page (the exact inverse of [[Jet3Format.parseTdef]]):
-    * header fields at Jet3 offsets, 18-byte descriptors, u8-length
-    * CP1252 names, empty index section. */
-  def tdefPage3(
-      schema: StructType, codes: Array[Int], numRows: Int,
-      system: Boolean): Array[Byte] = {
-    val p = new Array[Byte](P3)
-    val b = ByteBuffer.wrap(p).order(ByteOrder.LITTLE_ENDIAN)
-    p(0) = 0x02; p(1) = 0x01
-    b.putInt(4, 0) // single-page TDEF
-    b.putInt(12, numRows)
-    p(20) = if (system) 0x53.toByte else 0x4e.toByte
-    val nVar = codes.count(isVar3)
-    b.putShort(21, codes.length.toShort) // max_cols
-    b.putShort(23, nVar.toShort)
-    b.putShort(25, codes.length.toShort)
-    b.putInt(27, 0) // num_idx (the profile's index section is empty)
-    b.putInt(31, 0) // num_real_idx
-    var off = 43
-    var fOff = 0
-    var vIdx = 0
-    codes.zipWithIndex.foreach { case (code, i) =>
-      p(off) = code.toByte
-      b.putShort(off + 1, i.toShort) // col_num
-      if (isVar3(code)) { b.putShort(off + 3, vIdx.toShort); vIdx += 1 }
-      b.putShort(off + 5, i.toShort)
-      val fixed = !isVar3(code)
-      p(off + 13) = ((if (fixed) 0x01 else 0x00) | 0x02).toByte
-      if (fixed && code != T_BOOL) {
-        b.putShort(off + 14, fOff.toShort)
-        fOff += fixedLen3(code)
-      }
-      b.putShort(off + 16,
-        (if (fixed) fixedLen3(code) else 0).toShort)
-      off += 18
-    }
-    schema.fields.foreach { f =>
-      val nb = encodeText3(f.name, s"(column name '${f.name}')")
-      require(nb.length <= 255,
-        s"jetmdb/jet3: column name '${f.name}' longer than 255 bytes")
-      p(off) = nb.length.toByte
-      System.arraycopy(nb, 0, p, off + 1, nb.length)
-      off += 1 + nb.length
-    }
-    require(off <= P3,
-      "jetmdb/jet3: schema too wide for a single TDEF page")
-    // tdef_len @8: the documented logical length (r12 review — the
-    // reader ignores it, but external tooling sizes TDEFs by it)
-    b.putInt(8, off)
-    p
-  }
-
-  /** Greedy packer: encoded rows → Jet3 data pages owned by
-    * `tdefPage` (row count @8, offsets from @10, free space @2). */
-  def pack3(
-      rows: Iterator[Array[Byte]], tdefPage: Int)
-      : Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
-      private val it = rows.buffered
-      override def hasNext: Boolean = it.hasNext
-      override def next(): Array[Byte] = {
-        val p = new Array[Byte](P3)
-        val b = ByteBuffer.wrap(p).order(ByteOrder.LITTLE_ENDIAN)
-        p(0) = 0x01; p(1) = 0x01
-        b.putInt(4, tdefPage)
-        var dataTop = P3
-        var n = 0
-        var fits = true
-        while (it.hasNext && fits) {
-          val r = it.head
-          if (10 + 2 * (n + 1) <= dataTop - r.length) {
-            it.next()
-            dataTop -= r.length
-            System.arraycopy(r, 0, p, dataTop, r.length)
-            b.putShort(10 + 2 * n, dataTop.toShort)
-            n += 1
-          } else fits = false
-        }
-        b.putShort(8, n.toShort)
-        b.putShort(2, (dataTop - (10 + 2 * n)).toShort)
-        p
-      }
-    }
-
-  private[jetmdb] val sysSchema3 = StructType(Seq(
-    StructField("Id", IntegerType), StructField("Type", ShortType),
-    StructField("Name", StringType)))
-  private[jetmdb] val sysCodes3 = Array(T_LONG, T_INT, T_TEXT)
-
-  /** Fresh Jet3 database: header (version 0x00), usage placeholder,
-    * MSysObjects TDEF (page 2) + single catalog data page (page 3),
-    * user TDEF (page 4), data pages — the same page order the
-    * test-side fixture writer emits, so single-table outputs are
-    * byte-comparable against an independent encoder. */
-  def freshPages3(
-      table: String, schema: StructType, codes: Array[Int],
-      numRows: Int, blobs: Iterator[Array[Byte]],
-      writePage: Array[Byte] => Unit): Unit = {
-    import org.apache.spark.sql.catalyst.{InternalRow => IRow}
-    import org.apache.spark.unsafe.types.UTF8String
-    val hdr = new Array[Byte](P3)
-    hdr(0) = 0x00; hdr(1) = 0x01
-    val magic = Magic.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    System.arraycopy(magic, 0, hdr, 4, magic.length)
-    hdr(0x14) = 0x00 // Jet3
-    writePage(hdr)
-    val usage = new Array[Byte](P3)
-    usage(0) = 0x05; usage(1) = 0x01
-    writePage(usage)
-    val catRows = Seq(
-      IRow(2, 3.toShort, UTF8String.fromString("MSysObjects")),
-      IRow(4, 1.toShort, UTF8String.fromString(table)))
-      .map(encodeRow3(_, sysSchema3, sysCodes3))
-    writePage(tdefPage3(sysSchema3, sysCodes3, catRows.size,
-      system = true))
-    val catPages = pack3(catRows.iterator, 2).toSeq
-    require(catPages.size == 1, "jetmdb/jet3: catalog must fit one page")
-    catPages.foreach(writePage)
-    writePage(tdefPage3(schema, codes, numRows, system = false))
-    pack3(blobs, 4).foreach(writePage)
-  }
-
-  /** APPEND a table to an existing Jet3 database: copy its pages, add
-    * the new TDEF + data pages, rebuild the single catalog data page,
-    * patch MSysObjects' TDEF row count (@12 in Jet3). Same-named
-    * tables are rejected, never replaced.
-    *
-    * DRIVER-MEMORY BOUND: `pages` is the ENTIRE existing database
-    * buffered in driver heap — up to Jet3's 1 GB format cap — and a
-    * repeated multi-table append re-reads and re-writes the whole file
-    * each time (O(file size) per append). That is the deliberate
-    * interchange-scale contract of this sink (see the commit()
-    * scaladoc); bulk data belongs in parquet/JDBC, not `.mdb`. */
-  def appendPages3(
-      pages: Array[Array[Byte]], table: String, schema: StructType,
-      codes: Array[Int], numRows: Int, blobs: Iterator[Array[Byte]],
-      writePage: Array[Byte] => Unit): Unit = {
-    import org.apache.spark.sql.catalyst.{InternalRow => IRow}
-    import org.apache.spark.unsafe.types.UTF8String
-    require(Jet3Format.isJet3(pages(0)),
-      "jetmdb/jet3 append: target file is not a Jet3 database " +
-        "(Jet4 targets append with the default version)")
-    // encrypted-target rejection, mirroring the Jet4 path (r14
-    // review wave 2): Jet3 stores the RC4 key UNmasked at 0x3e, and
-    // appending plaintext pages into a scrambled file corrupts it
-    // for every other reader
-    val sysTdef =
-      try Jet3Format.parseTdefChained(2, pages(_))
-      catch {
-        case e: RuntimeException
-            if JetCrypt.candidateKey(pages(0), jet3 = true) != 0 =>
-          throw new UnsupportedOperationException(
-            "jetmdb/jet3 append: the target file is " +
-              "RC4-page-scrambled (encrypted) — appending would " +
-              "interleave plaintext pages; read it and overwrite to " +
-              "a fresh file instead", e)
-      }
-    require(sysTdef.columns.map(c => (c.name, c.typeCode)) == Seq(
-      ("Id", T_LONG), ("Type", T_INT), ("Name", T_TEXT)),
-      "jetmdb/jet3 append: page-2 catalog TDEF is not the " +
-        "(Id, Type, Name) profile this writer maintains")
-    var catPageNum = -1
-    val oldCat = (1 until pages.length).flatMap { pn =>
-      val extents = Jet3Format.dataRowExtents(pages(pn), 2)
-      if (extents.nonEmpty) {
-        require(catPageNum == -1 || catPageNum == pn,
-          "jetmdb/jet3 append: multi-page catalogs are out of this " +
-            "writer's single-page discipline")
-        catPageNum = pn
-      }
-      extents.map { case (rs, re) =>
-        val row = Jet3Format.decodeRow(pages(pn), rs, re, sysTdef)
-        // real Jet stores flags in the Id high byte — mask like the
-        // reader's catalog walk
-        (row(0).asInstanceOf[Integer].intValue() & 0x00FFFFFF,
-          row(1).asInstanceOf[Short].toInt,
-          String.valueOf(row(2)))
-      }
-    }
-    require(catPageNum > 0, "jetmdb/jet3 append: no catalog data page")
-    require(!oldCat.exists(_._3.equalsIgnoreCase(table)),
-      s"jetmdb/jet3 append: table '$table' already exists (append " +
-        "adds tables, never replaces — overwrite mode rewrites the " +
-        "database)")
-    val newTdefPage = pages.length
-    val catRows = oldCat.map { case (id, tp, nm) =>
-      IRow(id, tp.toShort, UTF8String.fromString(nm))
-    } :+ IRow(newTdefPage, 1.toShort, UTF8String.fromString(table))
-    val newCatPages = pack3(
-      catRows.map(encodeRow3(_, sysSchema3, sysCodes3)).iterator, 2).toSeq
-    require(newCatPages.size == 1,
-      "jetmdb/jet3 append: catalog no longer fits its single page — " +
-        "the database has reached this writer's table-count capacity")
-    val page2 = pages(2).clone()
-    ByteBuffer.wrap(page2).order(ByteOrder.LITTLE_ENDIAN)
-      .putInt(12, catRows.size) // Jet3 TDEF num_rows @12
-    pages(2) = page2
-    pages(catPageNum) = newCatPages.head
-    pages.foreach(writePage)
-    writePage(tdefPage3(schema, codes, numRows, system = false))
-    pack3(blobs, newTdefPage).foreach(writePage)
-  }
 }

@@ -70,13 +70,14 @@ object JetCrypt {
 
   private val KeyOffset = 0x3e
 
-  /** Little-endian int at `off`, XORed with the Jet4 header mask for
-    * non-Jet3 files (whose header region is stored masked). */
-  def candidateKey(page0: Array[Byte], jet3: Boolean): Int = {
+  /** The database key at header offset 0x3e, unmasked with the fixed
+    * header keystream where the layout stores it masked. */
+  def candidateKey(page0: Array[Byte], l: JetLayout): Int = {
     def b(o: Int): Int = {
       val raw = page0(o) & 0xFF
-      if (jet3) raw
-      else raw ^ (headerMask(o - HeaderMaskStart) & 0xFF)
+      if (l.maskedHeaderKey)
+        raw ^ (headerMask(o - HeaderMaskStart) & 0xFF)
+      else raw
     }
     b(KeyOffset) | (b(KeyOffset + 1) << 8) |
       (b(KeyOffset + 2) << 16) | (b(KeyOffset + 3) << 24)

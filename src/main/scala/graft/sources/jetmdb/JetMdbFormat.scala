@@ -28,15 +28,18 @@ import graft.sources.JetTypes._
   * MSysComplexColumns catalog (r13 — was a rejection); ACE Date/Time
   * Extended (0x14) decodes under the documented 9:5:7 ASCII-digit
   * profile ([[extDateToMicros]], r13). Jet3
-  * (Access 97) files are DISPATCHED by the source layer
-  * to the scope-bounded [[Jet3Format]] profile (2048-byte pages,
-  * CP1252 text, u8 row offsets). Validated
+  * (Access 97) files are read by the same functions: every offset and
+  * width that differs between versions is a field of the
+  * [[JetLayout]] each function takes, and [[JetLayout.Jet3]] carries
+  * the scope-bounded Jet3 profile (2048-byte pages, CP1252 text, u8
+  * row offsets). Validated
   * against generated fixtures (no real `.mdb` exists in this offline
   * environment — JetMdbSourceSpec writes fixtures through an
   * independent test-side writer that follows the same public layout
   * notes).
   *
-  * Layout facts used (all from the public format description):
+  * Layout facts used (all from the public format description; Jet4
+  * offsets shown, [[JetLayout]] holds both versions'):
   *   - file = array of 4096-byte pages; all integers little-endian;
   *   - page 0: 0x00 0x01, "Standard Jet DB\0" at offset 4, format
   *     version byte at 0x14 (0x01 = Jet4);
@@ -66,7 +69,6 @@ import graft.sources.JetTypes._
   */
 object JetMdbFormat {
 
-  val PageSize = 4096
   val Magic = "Standard Jet DB"
   /** ACE (`.accdb`) page-0 magic — same length as [[Magic]], same
     * offset 4, version byte 0x02+ at 0x14. */
@@ -84,7 +86,11 @@ object JetMdbFormat {
       scale: Int = 0, // NUMERIC scale (descriptor byte 12)
       // descriptor flag 0x04: Access AutoNumber (auto-incrementing
       // LONG) — carried so the migration can render an IDENTITY column
-      autoNumber: Boolean = false)
+      autoNumber: Boolean = false) {
+    /** Stored in the row's var-data region (BOOL lives in the null
+      * mask whatever its fixed flag says). */
+    def isVar: Boolean = !fixed && typeCode != T_BOOL
+  }
 
   /** One index from a TDEF's index section (the `mdb-schema` CREATE
     * INDEX / PRIMARY KEY surface). `columns` in index-key order;
@@ -101,6 +107,8 @@ object JetMdbFormat {
       tableType: Int, // 0x4e user, 0x53 system
       columns: Seq[JetColumn],
       indexes: Seq[JetIndex] = Nil) {
+    /** Rows carry a var-offset table only when some column is var. */
+    val hasVarCols: Boolean = columns.exists(_.isVar)
     def jetTypes: Seq[(String, JetType)] =
       columns.map(c => c.name ->
         JetMdbFormat.toJetType(c.typeCode, c.length, c.prec, c.scale))
@@ -186,11 +194,10 @@ object JetMdbFormat {
   final class NotATdefException(msg: String)
     extends IllegalArgumentException(msg)
 
-  /** Catalog-walk wrapper SHARED by the Jet4/ACE and Jet3 paths (r12
-    * review de-duplicated the two copies): an encrypted database has
-    * a VALID page-0 header but RC4-obfuscated pages from page 1 on,
-    * so the page-2 catalog TDEF's type byte reads as noise — name
-    * the likely cause instead of the bare type diagnostic. Since r14
+  /** Catalog-walk wrapper: an encrypted database has a VALID page-0
+    * header but RC4-obfuscated pages from page 1 on, so the page-2
+    * catalog TDEF's type byte reads as noise — name the likely cause
+    * instead of the bare type diagnostic. Since r14
     * this failure triggers [[graft.sources.jetmdb.JetCrypt]]'s
     * automatic retry under the public file-keyed RC4 page-scramble
     * profile (JetMdbSource.catalogOf), so this hint surfaces only
@@ -233,10 +240,14 @@ object JetMdbFormat {
     java.lang.Float.intBitsToFloat(i32(p, off))
   def f64(p: Array[Byte], off: Int): Double =
     java.lang.Double.longBitsToDouble(i64(p, off))
+  /** Unsigned int of a layout-given `width`, 1 or 2 bytes. */
+  def uw(p: Array[Byte], off: Int, width: Int): Int =
+    if (width == 1) u8(p, off) else u16(p, off)
 
   /** Validate page 0; returns unit or throws with a precise reason.
-    * Accepts Jet4 (0x01), Jet3 (0x00 — dispatched to [[Jet3Format]]
-    * by the source layer), and — since r12 — ACE `.accdb` versions
+    * Accepts Jet4 (0x01), Jet3 (0x00 — read through
+    * [[JetLayout.Jet3]], see [[JetLayout.of]]), and — since r12 — ACE
+    * `.accdb` versions
     * 0x02 (Access 2007) through 0x05, which publicly share the Jet4
     * page geometry (4096-byte pages, same TDEF/data/row layouts; the
     * mdbtools format notes drive accdb through the Jet4 offsets) and
@@ -273,31 +284,16 @@ object JetMdbFormat {
       new String(page0, 4, MagicAce.length,
         StandardCharsets.US_ASCII) == MagicAce
 
-  /** Parse a single-page TDEF. Callers holding a page fetcher should
-    * prefer [[parseTdefChained]], which also accepts the multi-page
-    * chains wide tables produce (r12). */
-  def parseTdef(page: Array[Byte], pageNum: Int): JetTableDef = {
-    // type check FIRST: a non-TDEF page must say so, not claim a
-    // chain exists (r12 review)
-    if (u8(page, 0) != 0x02)
-      throw new NotATdefException(
-        s"jetmdb: page $pageNum is not a TDEF (type ${u8(page, 0)})")
-    require(page.length < 2 * PageSize && i32(page, 4) == 0,
-      s"jetmdb: multi-page TDEF at $pageNum needs the chained parse " +
-        "path (parseTdefChained)")
-    parseTdefBuffer(page, pageNum)
-  }
-
-  /** Walk a TDEF chain into one logical buffer (shared by the Jet4/
-    * ACE and Jet3 paths — the concatenation is geometry-independent):
-    * head page whole, each continuation past its 8-byte header. */
-  private[jetmdb] def chainTdefBuffer(
-      pageNum: Int, pages: Int => Array[Byte],
-      prefix: String): Array[Byte] = {
+  /** Walk a TDEF chain into one logical buffer (the concatenation is
+    * geometry-independent): head page whole, each continuation past
+    * its 8-byte header. */
+  private def chainTdefBuffer(
+      l: JetLayout, pageNum: Int,
+      pages: Int => Array[Byte]): Array[Byte] = {
     val head = pages(pageNum)
     if (u8(head, 0) != 0x02)
       throw new NotATdefException(
-        s"$prefix: page $pageNum is not a TDEF (type ${u8(head, 0)})")
+        s"${l.prefix}: page $pageNum is not a TDEF (type ${u8(head, 0)})")
     var next = i32(head, 4)
     if (next == 0) head
     else {
@@ -307,12 +303,12 @@ object JetMdbFormat {
       while (next != 0) {
         hops += 1
         require(hops <= 64,
-          s"$prefix: TDEF chain from page $pageNum exceeds 64 pages " +
-            "(cyclic next pointers?)")
+          s"${l.prefix}: TDEF chain from page $pageNum exceeds 64 " +
+            "pages (cyclic next pointers?)")
         val p = pages(next)
         if (u8(p, 0) != 0x02)
           throw new NotATdefException(
-            s"$prefix: TDEF continuation page $next has type " +
+            s"${l.prefix}: TDEF continuation page $next has type " +
               f"0x${u8(p, 0)}%02x, not TDEF")
         out.write(p, 8, p.length - 8)
         next = i32(p, 4)
@@ -327,21 +323,18 @@ object JetMdbFormat {
     * bytes past its 8-byte page header — the public concatenation
     * profile (mdbtools copies continuation content from offset 8).
     * Every parse offset is relative to the head page start exactly as
-    * in the single-page case, so the same buffer parser serves both.
+    * in the single-page case, so one buffer parser serves both.
     * Wide tables (Access allows 255 columns; 25-byte descriptors +
     * UCS-2 names overflow 4096 bytes past ~110 columns) need this —
     * the r11 reader rejected them. */
   def parseTdefChained(
-      pageNum: Int, pages: Int => Array[Byte]): JetTableDef =
-    parseTdefBuffer(
-      chainTdefBuffer(pageNum, pages, "jetmdb"), pageNum)
+      l: JetLayout, pageNum: Int,
+      pages: Int => Array[Byte]): JetTableDef =
+    parseTdefBuffer(l, chainTdefBuffer(l, pageNum, pages), pageNum)
 
   private def parseTdefBuffer(
-      page: Array[Byte], pageNum: Int): JetTableDef = {
-    if (u8(page, 0) != 0x02)
-      throw new NotATdefException(
-        s"jetmdb: page $pageNum is not a TDEF (type ${u8(page, 0)})")
-    // Jet4 table header, offsets relative to page start:
+      l: JetLayout, page: Array[Byte], pageNum: Int): JetTableDef = {
+    // Table header (Jet4 offsets; Jet3's in [[JetLayout.Jet3]]):
     //   @8  u32 tdef_len, @12 u32 unknown, @16 u32 num_rows,
     //   @20 u32 autonumber, @24 4 unknown, @28 4 unknown,
     //   @32 4 unknown, @36 4 unknown, @40 u8 table_type,
@@ -349,12 +342,12 @@ object JetMdbFormat {
     //   @47 u32 num_idx, @51 u32 num_real_idx,
     //   @55 u8x3+u8 used_pages row ptr, @59 free_pages row ptr,
     //   then num_real_idx * 8 index bytes, then columns.
-    val tableType = u8(page, 40)
-    val numRows = i32(page, 16)
-    val numVarCols = u16(page, 43)
-    val numCols = u16(page, 45)
-    val numRealIdx = i32(page, 51)
-    var off = 63 + numRealIdx * 8
+    val tableType = u8(page, l.tableTypeOff)
+    val numRows = i32(page, l.numRowsOff)
+    val numVarCols = u16(page, l.numVarColsOff)
+    val numCols = u16(page, l.numColsOff)
+    val numRealIdx = i32(page, l.numRealIdxOff)
+    var off = l.colStart + numRealIdx * 8
     val cols = new Array[JetColumn](numCols)
     var i = 0
     // Jet4 column descriptor: 25 bytes
@@ -364,91 +357,95 @@ object JetMdbFormat {
     //   @18 u8 unknown, @19 u16 offset_F, @21 u16 col_len, @23 u16 pad
     while (i < numCols) {
       val t = u8(page, off)
-      val colNum = u16(page, off + 5)
-      val offV = u16(page, off + 7)
-      val flags = u8(page, off + 17)
-      val offF = u16(page, off + 19)
-      val len = u16(page, off + 21)
-      // bytes 11/12 carry precision/scale for NUMERIC (sort order for
-      // text — only read where they mean something)
+      if (l.outOfProfileTypes(t))
+        throw new UnsupportedOperationException(
+          l.outOfProfile(f"column type 0x$t%02x"))
+      val flags = u8(page, off + l.descFlags)
+      // the precision/scale bytes carry sort order for text — only
+      // read where they mean something
       val (prec, scale) =
-        if (t == T_NUMERIC) (u8(page, off + 11), u8(page, off + 12))
+        if (t == T_NUMERIC)
+          (u8(page, off + l.descPrec), u8(page, off + l.descPrec + 1))
         else (0, 0)
-      cols(i) = JetColumn("", t, colNum, (flags & 0x01) != 0, offF, offV,
-        len, prec, scale, autoNumber = (flags & 0x04) != 0)
-      off += 25
+      cols(i) = JetColumn("", t, u16(page, off + l.descColNum),
+        (flags & 0x01) != 0, u16(page, off + l.descOffF),
+        u16(page, off + l.descOffV), u16(page, off + l.descLen), prec,
+        scale, autoNumber = (flags & 0x04) != 0)
+      off += l.descSize
       i += 1
     }
-    // names: u16 byte-length + UCS-2LE, one per column in order
+    // names: length prefix + name bytes, one per column in order
+    def name(): String = {
+      val n = uw(page, off, l.nameLenWidth)
+      off += l.nameLenWidth
+      val s = new String(page, off, n, l.nameCharset)
+      off += n
+      s
+    }
     i = 0
     while (i < numCols) {
-      val n = u16(page, off)
-      off += 2
-      val name = new String(page, off, n, StandardCharsets.UTF_16LE)
-      cols(i) = cols(i).copy(name = name)
-      off += n
+      cols(i) = cols(i).copy(name = name())
       i += 1
     }
-    require(cols.count(c => !c.fixed && c.typeCode != T_BOOL) == numVarCols,
-      s"jetmdb: TDEF var-column count mismatch on page $pageNum")
-    // ---- index section (after the column names; public Jet4 layout,
-    // same provenance as the rest of this file). Per PHYSICAL index
-    // (num_real_idx, 52 bytes): u32 unknown, 10 × (u16 col_num +
-    // u8 col_order; col_num 0xFFFF = unused slot), u32 usage-map ptr,
-    // u32 first index page, u8 flags (0x01 = unique), 9 unknown.
-    // Per LOGICAL index (num_idx, 28 bytes): u32 unknown,
-    // u32 index_num, u32 backing physical index, 15 bytes
-    // relationship bookkeeping, u8 index_type (0x01 primary,
-    // 0x02 relationship-backing, 0x00 plain). Then num_idx
-    // u16-length-prefixed UCS-2LE index names. A TDEF written before
-    // this section existed carries num_idx = num_real_idx = 0 and
-    // parses exactly as before.
-    val numIdx = i32(page, 47)
-    val colByNum = cols.map(c => c.colNum -> c.name).toMap
-    val physCols = new Array[Seq[String]](numRealIdx)
-    val physUnique = new Array[Boolean](numRealIdx)
-    var r = 0
-    while (r < numRealIdx) {
-      off += 4
-      val members = (0 until 10).flatMap { slot =>
-        val cn = u16(page, off + 3 * slot)
-        if (cn == 0xFFFF) None
-        else Some(colByNum.getOrElse(cn,
-          throw new IllegalArgumentException(
-            s"jetmdb: index on page $pageNum names unknown column $cn")))
+    require(cols.count(_.isVar) == numVarCols,
+      s"${l.prefix}: TDEF var-column count mismatch on page $pageNum")
+    val idxs = if (!l.indexSection) Nil else {
+      // ---- index section (after the column names; public Jet4 layout,
+      // same provenance as the rest of this file). Per PHYSICAL index
+      // (num_real_idx, 52 bytes): u32 unknown, 10 × (u16 col_num +
+      // u8 col_order; col_num 0xFFFF = unused slot), u32 usage-map ptr,
+      // u32 first index page, u8 flags (0x01 = unique), 9 unknown.
+      // Per LOGICAL index (num_idx, 28 bytes): u32 unknown,
+      // u32 index_num, u32 backing physical index, 15 bytes
+      // relationship bookkeeping, u8 index_type (0x01 primary,
+      // 0x02 relationship-backing, 0x00 plain). Then num_idx
+      // u16-length-prefixed UCS-2LE index names. A TDEF written before
+      // this section existed carries num_idx = num_real_idx = 0 and
+      // parses exactly as before.
+      val numIdx = i32(page, l.numIdxOff)
+      val colByNum = cols.map(c => c.colNum -> c.name).toMap
+      val physCols = new Array[Seq[String]](numRealIdx)
+      val physUnique = new Array[Boolean](numRealIdx)
+      var r = 0
+      while (r < numRealIdx) {
+        off += 4
+        val members = (0 until 10).flatMap { slot =>
+          val cn = u16(page, off + 3 * slot)
+          if (cn == 0xFFFF) None
+          else Some(colByNum.getOrElse(cn,
+            throw new IllegalArgumentException(
+              s"jetmdb: index on page $pageNum names unknown column $cn")))
+        }
+        off += 30 // 10 column slots
+        off += 4 // usage-map ptr
+        off += 4 // first index page
+        physUnique(r) = (u8(page, off) & 0x01) != 0
+        off += 1 + 9
+        physCols(r) = members
+        r += 1
       }
-      off += 30 // 10 column slots
-      off += 4 // usage-map ptr
-      off += 4 // first index page
-      physUnique(r) = (u8(page, off) & 0x01) != 0
-      off += 1 + 9
-      physCols(r) = members
-      r += 1
-    }
-    val logicalPhys = new Array[Int](numIdx)
-    val logicalType = new Array[Int](numIdx)
-    var l = 0
-    while (l < numIdx) {
-      off += 4 // unknown
-      off += 4 // index_num
-      logicalPhys(l) = i32(page, off)
-      off += 4
-      off += 15 // relationship bookkeeping
-      logicalType(l) = u8(page, off)
-      off += 1
-      l += 1
-    }
-    val idxs = (0 until numIdx).map { k =>
-      val n = u16(page, off)
-      off += 2
-      val name = new String(page, off, n, StandardCharsets.UTF_16LE)
-      off += n
-      val phys = logicalPhys(k)
-      require(phys >= 0 && phys < numRealIdx,
-        s"jetmdb: logical index '$name' on page $pageNum points at " +
-          s"physical index $phys of $numRealIdx")
-      val primary = logicalType(k) == 0x01
-      JetIndex(name, physCols(phys), physUnique(phys) || primary, primary)
+      val logicalPhys = new Array[Int](numIdx)
+      val logicalType = new Array[Int](numIdx)
+      var li = 0
+      while (li < numIdx) {
+        off += 4 // unknown
+        off += 4 // index_num
+        logicalPhys(li) = i32(page, off)
+        off += 4
+        off += 15 // relationship bookkeeping
+        logicalType(li) = u8(page, off)
+        off += 1
+        li += 1
+      }
+      (0 until numIdx).map { k =>
+        val n = name()
+        val phys = logicalPhys(k)
+        require(phys >= 0 && phys < numRealIdx,
+          s"jetmdb: logical index '$n' on page $pageNum points at " +
+            s"physical index $phys of $numRealIdx")
+        val primary = logicalType(k) == 0x01
+        JetIndex(n, physCols(phys), physUnique(phys) || primary, primary)
+      }
     }
     JetTableDef(pageNum, numRows, tableType, cols.toSeq, idxs)
   }
@@ -464,22 +461,23 @@ object JetMdbFormat {
     * live record from a real Access-written file — the scope contract
     * is "rejected explicitly, never misparsed". */
   def dataRowExtents(
-      page: Array[Byte], tdefPage: Int): Seq[(Int, Int)] = {
+      l: JetLayout, page: Array[Byte], tdefPage: Int): Seq[(Int, Int)] = {
     if (u8(page, 0) != 0x01 || i32(page, 4) != tdefPage) return Nil
-    val nRows = u16(page, 12)
+    val nRows = u16(page, l.rowCountOff)
     val out = Vector.newBuilder[(Int, Int)]
     var i = 0
-    var prevStart = PageSize
+    var prevStart = l.pageSize
     while (i < nRows) {
-      val raw = u16(page, 14 + 2 * i)
+      val raw = u16(page, l.rowDirOff + 2 * i)
       val start = raw & 0x1FFF
       val deleted = (raw & 0x8000) != 0
       val overflow = (raw & 0x4000) != 0
       if (!deleted && overflow)
         throw new IllegalArgumentException(
-          s"jetmdb: overflow row $i on a page owned by TDEF $tdefPage " +
-            "(flag 0x4000): moved-row pointers are out of scope for " +
-            "this reader; compact the database before migrating")
+          s"${l.prefix}: overflow row $i on a page owned by TDEF " +
+            s"$tdefPage (flag 0x4000): moved-row pointers are out of " +
+            "scope for this reader; compact the database before " +
+            "migrating")
       // the row ABOVE (previous index) bounds this row's extent; a
       // deleted row still occupies its slot for extent computation
       if (!deleted) out += ((start, prevStart))
@@ -492,14 +490,14 @@ object JetMdbFormat {
   /** Extent [start, end) of row `rowIdx` on `page` regardless of
     * owner — the LVAL lookup path (a memo pointer addresses a
     * specific row on a long-value page). */
-  def rowExtent(page: Array[Byte], rowIdx: Int): (Int, Int) = {
-    val nRows = u16(page, 12)
+  def rowExtent(l: JetLayout, page: Array[Byte], rowIdx: Int): (Int, Int) = {
+    val nRows = u16(page, l.rowCountOff)
     require(rowIdx < nRows,
-      s"jetmdb: LVAL row $rowIdx out of range ($nRows rows)")
-    val start = u16(page, 14 + 2 * rowIdx) & 0x1FFF
+      s"${l.prefix}: LVAL row $rowIdx out of range ($nRows rows)")
+    val start = u16(page, l.rowDirOff + 2 * rowIdx) & 0x1FFF
     val end =
-      if (rowIdx == 0) PageSize
-      else u16(page, 14 + 2 * (rowIdx - 1)) & 0x1FFF
+      if (rowIdx == 0) l.pageSize
+      else u16(page, l.rowDirOff + 2 * (rowIdx - 1)) & 0x1FFF
     (start, end)
   }
 
@@ -511,24 +509,25 @@ object JetMdbFormat {
     * (flag 0x00) payloads walk [next-pointer][chunk] rows until the
     * declared length is collected. */
   def resolveMemo(
-      page: Array[Byte], s: Int, e: Int,
+      l: JetLayout, page: Array[Byte], s: Int, e: Int,
       lval: Int => Array[Byte]): Array[Byte] = {
-    require(e - s >= 12, s"jetmdb: memo header truncated (${e - s} bytes)")
+    val pre = l.prefix
+    require(e - s >= 12, s"$pre: memo header truncated (${e - s} bytes)")
     val hdr = i32(page, s)
     val len = hdr & 0xFFFFFF
     val flags = (hdr >>> 24) & 0xFF
     if ((flags & MemoInline) != 0) {
-      require(s + 12 + len <= e, "jetmdb: inline memo overruns its row")
+      require(s + 12 + len <= e, s"$pre: inline memo overruns its row")
       java.util.Arrays.copyOfRange(page, s + 12, s + 12 + len)
     } else if ((flags & MemoSingleLval) != 0) {
       require(lval != null,
-        "jetmdb: LVAL memo encountered but no page fetcher supplied")
+        s"$pre: LVAL memo encountered but no page fetcher supplied")
       val ptr = i32(page, s + 4)
       val lvalPage = lval(ptr & 0xFFFFFF)
       require(i32(lvalPage, 4) == LvalOwner,
-        s"jetmdb: memo pointer targets a non-LVAL page ${ptr & 0xFFFFFF}")
-      val (ls, le) = rowExtent(lvalPage, (ptr >>> 24) & 0xFF)
-      require(le - ls >= len, "jetmdb: LVAL row shorter than memo length")
+        s"$pre: memo pointer targets a non-LVAL page ${ptr & 0xFFFFFF}")
+      val (ls, le) = rowExtent(l, lvalPage, (ptr >>> 24) & 0xFF)
+      require(le - ls >= len, s"$pre: LVAL row shorter than memo length")
       java.util.Arrays.copyOfRange(lvalPage, ls, ls + len)
     } else {
       // chained (type-2) LVAL: each pointed-at row is [4-byte next
@@ -537,23 +536,23 @@ object JetMdbFormat {
       // row extent bounds each chunk), so this also reads files whose
       // chains hop rows within one page.
       require(lval != null,
-        "jetmdb: LVAL memo encountered but no page fetcher supplied")
+        s"$pre: LVAL memo encountered but no page fetcher supplied")
       val out = new java.io.ByteArrayOutputStream(len)
       var ptr = i32(page, s + 4)
       var remaining = len
       var hops = 0
       while (remaining > 0) {
         require(ptr != 0,
-          s"jetmdb: chained LVAL ended $remaining bytes short")
+          s"$pre: chained LVAL ended $remaining bytes short")
         // a chain can't be longer than one chunk byte per hop; this
         // bound rejects pointer cycles without tracking a visited set
         hops += 1
-        require(hops <= len + 1, "jetmdb: chained LVAL pointer cycle")
+        require(hops <= len + 1, s"$pre: chained LVAL pointer cycle")
         val lvalPage = lval(ptr & 0xFFFFFF)
         require(i32(lvalPage, 4) == LvalOwner,
-          s"jetmdb: chain pointer targets a non-LVAL page ${ptr & 0xFFFFFF}")
-        val (ls, le) = rowExtent(lvalPage, (ptr >>> 24) & 0xFF)
-        require(le - ls >= 4, "jetmdb: chained LVAL row too short")
+          s"$pre: chain pointer targets a non-LVAL page ${ptr & 0xFFFFFF}")
+        val (ls, le) = rowExtent(l, lvalPage, (ptr >>> 24) & 0xFF)
+        require(le - ls >= 4, s"$pre: chained LVAL row too short")
         val chunk = math.min(le - ls - 4, remaining)
         out.write(lvalPage, ls + 4, chunk)
         remaining -= chunk
@@ -572,48 +571,47 @@ object JetMdbFormat {
     * page fetches entirely, so `select("id")` over a table with large
     * memos never pays their I/O. */
   def decodeRow(
-      page: Array[Byte], start: Int, end: Int,
+      l: JetLayout, page: Array[Byte], start: Int, end: Int,
       tdef: JetTableDef, lval: Int => Array[Byte] = null,
       wanted: Array[Boolean] = null): Array[Any] = {
-    val nCols = u16(page, start)
-    val bitmaskSz = (nCols + 7) / 8
-    val maskOff = end - bitmaskSz
-    def notNull(colNum: Int): Boolean =
-      (u8(page, maskOff + colNum / 8) & (1 << (colNum % 8))) != 0
-    val varCount =
-      if (tdef.columns.exists(c => !c.fixed && c.typeCode != T_BOOL))
-        u16(page, maskOff - 2)
-      else 0
-    // var offset table: (varCount+1) u16s from row start, ascending,
-    // located immediately below the var-count field; entry varCount is
-    // the end-of-data offset
-    val varTabOff = maskOff - 2 - 2 * (varCount + 1)
-    def varExtent(idx: Int): (Int, Int) = {
-      val s = u16(page, varTabOff + 2 * idx)
-      val e = u16(page, varTabOff + 2 * (idx + 1))
-      (start + s, start + e)
-    }
-    val fixedBase = start + 2
-    val out = new Array[Any](tdef.columns.length)
+    if (end - start > l.maxRowBytes)
+      throw new UnsupportedOperationException(l.outOfProfile(
+        s"a ${end - start}-byte row (this row form caps at " +
+          s"${l.maxRowBytes} bytes; longer rows use the jump-table form)"))
+    // column count, var count and var offsets share one width
+    val w = l.rowIntWidth
+    val maskOff = end - (uw(page, start, w) + 7) / 8
+    val varCount = if (tdef.hasVarCols) uw(page, maskOff - w, w) else 0
+    // var offset table: (varCount+1) entries from row start,
+    // ascending, immediately below the var-count field; entry
+    // varCount is the end-of-data offset
+    val varTabOff = maskOff - w * (varCount + 2)
+    val fixedBase = start + w
+    val cols = tdef.columns
+    val out = new Array[Any](cols.length)
     var i = 0
-    while (i < tdef.columns.length) {
-      val c = tdef.columns(i)
-      out(i) =
-        if (wanted != null && !wanted(i)) null
-        else if (c.typeCode == T_BOOL)
-          java.lang.Boolean.valueOf(notNull(c.colNum))
-        else if (!notNull(c.colNum)) null
-        else if (c.fixed) decodeFixed(page, fixedBase + c.offsetF, c)
-        else {
-          val (s, e) = varExtent(c.offsetV)
-          decodeVar(page, s, e, c, lval)
-        }
+    while (i < out.length) {
+      if (wanted == null || wanted(i)) {
+        val c = cols(i)
+        val n = c.colNum
+        val present = (u8(page, maskOff + n / 8) & (1 << (n % 8))) != 0
+        out(i) =
+          if (c.typeCode == T_BOOL) java.lang.Boolean.valueOf(present)
+          else if (!present) null
+          else if (c.fixed) decodeFixed(l, page, fixedBase + c.offsetF, c)
+          else {
+            val v = varTabOff + w * c.offsetV
+            decodeVar(l, page, start + uw(page, v, w),
+              start + uw(page, v + w, w), c, lval)
+          }
+      }
       i += 1
     }
     out
   }
 
-  private def decodeFixed(p: Array[Byte], off: Int, c: JetColumn): Any =
+  private def decodeFixed(
+      l: JetLayout, p: Array[Byte], off: Int, c: JetColumn): Any =
     c.typeCode match {
       case T_BYTE => (u8(p, off)).toShort // Jet byte is unsigned
       case T_INT => i16(p, off)
@@ -643,25 +641,25 @@ object JetMdbFormat {
           java.util.Arrays.copyOfRange(p, off + 1, off + 17))
         new java.math.BigDecimal(
           if (neg) mant.negate else mant, c.scale)
-      case T_TEXT => // fixed-width text: full UCS-2 field
-        decodeText(p, off, off + c.length)
+      case T_TEXT => // fixed-width text: the whole field
+        l.decodeText(p, off, off + c.length)
       case other =>
         throw new UnsupportedOperationException(
-          f"jetmdb: fixed type 0x$other%02x unsupported")
+          l.outOfProfile(f"fixed type 0x$other%02x"))
     }
 
   private def decodeVar(
-      p: Array[Byte], s: Int, e: Int, c: JetColumn,
+      l: JetLayout, p: Array[Byte], s: Int, e: Int, c: JetColumn,
       lval: Int => Array[Byte]): Any =
     c.typeCode match {
-      case T_TEXT => decodeText(p, s, e)
+      case T_TEXT => l.decodeText(p, s, e)
       case T_MEMO =>
-        val bytes = resolveMemo(p, s, e, lval)
-        decodeText(bytes, 0, bytes.length)
-      case T_OLE => resolveMemo(p, s, e, lval)
+        val bytes = resolveMemo(l, p, s, e, lval)
+        l.decodeText(bytes, 0, bytes.length)
+      case T_OLE => resolveMemo(l, p, s, e, lval)
       case other =>
         throw new UnsupportedOperationException(
-          f"jetmdb: var type 0x$other%02x unsupported")
+          l.outOfProfile(f"var type 0x$other%02x"))
     }
 
   /** Jet4 text: UCS-2LE, or "Unicode-compressed" when prefixed with
@@ -797,19 +795,17 @@ object JetMdbFormat {
     * (Name, Id, Type): a table object's TDEF page is the low 3 bytes
     * of its Id. `pages` is a by-number page accessor. */
   def readCatalog(
-      pageCount: Int, pages: Int => Array[Byte]): Seq[CatalogEntry] = {
-    val sysTdef = withEncryptedHint(parseTdefChained(2, pages))
-    val byName = sysTdef.columns.map(c => c.name -> c).toMap
-    require(byName.contains("Name") && byName.contains("Id") &&
-      byName.contains("Type"),
-      "jetmdb: MSysObjects TDEF lacks Name/Id/Type columns")
-    val nameIdx = sysTdef.columns.indexWhere(_.name == "Name")
-    val idIdx = sysTdef.columns.indexWhere(_.name == "Id")
-    val typeIdx = sysTdef.columns.indexWhere(_.name == "Type")
+      l: JetLayout, pageCount: Int,
+      pages: Int => Array[Byte]): Seq[CatalogEntry] = {
+    val sysTdef = withEncryptedHint(parseTdefChained(l, 2, pages))
+    val Seq(nameIdx, idIdx, typeIdx) =
+      Seq("Name", "Id", "Type").map(n => sysTdef.columns.indexWhere(_.name == n))
+    require(nameIdx >= 0 && idIdx >= 0 && typeIdx >= 0,
+      s"${l.prefix}: MSysObjects TDEF lacks Name/Id/Type columns")
     (1 until pageCount).flatMap { pn =>
       val page = pages(pn)
-      dataRowExtents(page, 2).map { case (s, e) =>
-        val row = decodeRow(page, s, e, sysTdef)
+      dataRowExtents(l, page, 2).map { case (s, e) =>
+        val row = decodeRow(l, page, s, e, sysTdef)
         CatalogEntry(
           String.valueOf(row(nameIdx)),
           row(idIdx).asInstanceOf[Integer].intValue() & 0x00FFFFFF,

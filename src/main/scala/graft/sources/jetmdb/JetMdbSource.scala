@@ -18,7 +18,8 @@ import graft.sources.JetTypes
 import graft.sources.jetcsv.JetCsvFilters
 import graft.sources.jetmdb.JetMdbFormat._
 
-/** DataSource V2 reader over a Jet4 `.mdb` file — the binary sibling
+/** DataSource V2 reader over a Jet `.mdb`/`.accdb` file (Jet3, Jet4 or
+  * ACE, one code path over the file's [[JetLayout]]) — the binary sibling
   * of the `jetcsv` export-directory source:
   * {{{
   *   spark.read.format("jetmdb")
@@ -77,8 +78,8 @@ object JetMdbSource {
       SparkSession.active.sparkContext.hadoopConfiguration)
 
   /** Read page `n` of `path` through the Hadoop FS (works for local
-    * and distributed stores alike). `pageSize` defaults to Jet4's
-    * 4096; Jet3 files read 2048-byte pages.
+    * and distributed stores alike); `pageSize` is the database
+    * layout's ([[JetLayout.pageSize]]).
     *
     * Seek-then-read on the one open stream, never the positioned
     * `readFully(pos, buf)`: on a checksummed FS (the `file:` scheme)
@@ -90,7 +91,7 @@ object JetMdbSource {
     * copy) opens its own. */
   def readPage(
       f: org.apache.hadoop.fs.FSDataInputStream, n: Int,
-      pageSize: Int = PageSize): Array[Byte] = {
+      pageSize: Int): Array[Byte] = {
     val page = new Array[Byte](pageSize)
     f.seek(n.toLong * pageSize)
     f.readFully(page)
@@ -116,51 +117,62 @@ object JetMdbSource {
     * paths (this repo's own writer stages to a fresh name and
     * renames, which updates mtime). */
   private val catalogCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), (Seq[CatalogEntry], Boolean, Int)]()
+    (String, Long, Long), (Seq[CatalogEntry], JetLayout, Int)]()
 
   /** Crypt-aware stream for page reads: plain when `dbKey` is 0, the
     * RC4 per-page decryptor otherwise (r14). */
-  private def openDb(path: String, jet3: Boolean,
+  private def openDb(path: String, l: JetLayout,
       dbKey: Int): org.apache.hadoop.fs.FSDataInputStream =
-    JetCrypt.open(fs(path), path, dbKey,
-      if (jet3) Jet3Format.PageSize else PageSize)
+    JetCrypt.open(fs(path), path, dbKey, l.pageSize)
 
-  /** (catalog, pageCount, jet3?, dbKey) — version sniffed from the
-    * header's format byte, page size and layout dispatched
-    * accordingly. dbKey (r14) is 0 for a plaintext database and the
-    * nonzero RC4 page-scramble key otherwise; the walk ALWAYS tries
-    * plaintext first, so a wrong key derivation can never garble a
-    * database the r13 reader could read. */
+  /** A page fetcher over `in` that keeps the last page it read: memo
+    * and OLE payload pages cluster near the rows that point at them,
+    * so this absorbs the repeated LVAL fetches without holding the
+    * file in memory. */
+  private[jetmdb] def lastPageCache(
+      in: org.apache.hadoop.fs.FSDataInputStream,
+      pageSize: Int): Int => Array[Byte] = {
+    var num = -1
+    var page: Array[Byte] = null
+    n => {
+      if (n != num) { page = readPage(in, n, pageSize); num = n }
+      page
+    }
+  }
+
+  private def asInt(v: Any): Int = v match {
+    case i: Integer => i.intValue()
+    case s: java.lang.Short => s.intValue()
+    case other => String.valueOf(other).toInt
+  }
+
+  /** (catalog, pageCount, layout, dbKey) — the layout sniffed once
+    * from page 0 ([[JetLayout.of]]). dbKey (r14) is 0 for a plaintext
+    * database and the nonzero RC4 page-scramble key otherwise; the
+    * walk ALWAYS tries plaintext first, so a wrong key derivation can
+    * never garble a database the r13 reader could read. */
   private def catalogOf(path: String)
-      : (Seq[CatalogEntry], Int, Boolean, Int) = {
+      : (Seq[CatalogEntry], Int, JetLayout, Int) = {
     require(path != null, "jetmdb: a path must be supplied")
     val h = fs(path)
     val st = h.getFileStatus(new Path(path))
     val key = (path, st.getLen, st.getModificationTime)
     val hit = catalogCache.get(key)
     if (hit != null) {
-      val (cat, jet3, dbKey) = hit
-      val ps = if (jet3) Jet3Format.PageSize else PageSize
-      (cat, (st.getLen / ps).toInt, jet3, dbKey)
+      val (cat, l, dbKey) = hit
+      (cat, (st.getLen / l.pageSize).toInt, l, dbKey)
     } else {
-      // the header fits the smaller (Jet3) page, and page 0 is never
-      // page-encrypted; sniff before choosing the page size
-      val (head, jet3, ps) = {
+      // page 0 is never page-encrypted
+      val head = {
         val in = h.open(new Path(path))
-        try {
-          val head = readPage(in, 0, Jet3Format.PageSize)
-          checkHeader(head)
-          val jet3 = Jet3Format.isJet3(head)
-          (head, jet3, if (jet3) Jet3Format.PageSize else PageSize)
-        } finally in.close()
+        try readPage(in, 0, JetLayout.HeaderBytes) finally in.close()
       }
-      val count = (st.getLen / ps).toInt
+      val l = JetLayout.of(head)
+      val count = (st.getLen / l.pageSize).toInt
       def walk(dbKey: Int): Seq[CatalogEntry] = {
-        val in = JetCrypt.open(h, path, dbKey, ps)
-        try {
-          if (jet3) Jet3Format.readCatalog(count, readPage(in, _, ps))
-          else readCatalog(count, readPage(in, _, ps))
-        } finally in.close()
+        val in = JetCrypt.open(h, path, dbKey, l.pageSize)
+        try readCatalog(l, count, readPage(in, _, l.pageSize))
+        finally in.close()
       }
       // Failures that noise pages can PRODUCE: the NotATdef/bounds
       // family (RuntimeExceptions) plus EOFException — a garbage
@@ -179,7 +191,7 @@ object JetMdbSource {
             // encrypted-database fallback (r14): the public RC4
             // page-scramble profile, keyed from the header itself.
             // Attempted ONLY after the plaintext walk failed.
-            val cand = JetCrypt.candidateKey(head, jet3)
+            val cand = JetCrypt.candidateKey(head, l)
             if (cand == 0) throw plainErr
             try (walk(cand), cand)
             catch {
@@ -195,8 +207,8 @@ object JetMdbSource {
             }
         }
       if (catalogCache.size > 256) catalogCache.clear()
-      catalogCache.put(key, (cat, jet3, dbKey))
-      (cat, count, jet3, dbKey)
+      catalogCache.put(key, (cat, l, dbKey))
+      (cat, count, l, dbKey)
     }
   }
 
@@ -242,7 +254,7 @@ object JetMdbSource {
 
   private[jetmdb] def complexIndexOf(
       path: String, hconf: org.apache.hadoop.conf.Configuration,
-      flatPage: Int, pageCount: Int, dbKey: Int = 0)
+      l: JetLayout, flatPage: Int, pageCount: Int, dbKey: Int)
       : Map[Int, org.apache.spark.sql.catalyst.util.GenericArrayData] = {
     val h = new Path(path).getFileSystem(hconf)
     val st = h.getFileStatus(new Path(path))
@@ -267,7 +279,7 @@ object JetMdbSource {
     // instead of each running the whole-file flat-table scan (r14
     // ADVICE — the old get/put raced N builders).
     complexIndexCache.computeIfAbsent(key,
-      _ => buildComplexIndex(path, h, flatPage, pageCount, dbKey))
+      _ => buildComplexIndex(path, h, l, flatPage, pageCount, dbKey))
   }
 
   /** The whole-file flat-table scan behind [[complexIndexOf]]'s
@@ -275,12 +287,12 @@ object JetMdbSource {
     * `flatPage` and groups payload rows by fk. Runs at most once per
     * (file, mtime, flatPage) per executor. */
   private def buildComplexIndex(
-      path: String, h: org.apache.hadoop.fs.FileSystem,
+      path: String, h: org.apache.hadoop.fs.FileSystem, l: JetLayout,
       flatPage: Int, pageCount: Int, dbKey: Int)
       : Map[Int, org.apache.spark.sql.catalyst.util.GenericArrayData] = {
-    val in = JetCrypt.open(h, path, dbKey, PageSize)
+    val in = JetCrypt.open(h, path, dbKey, l.pageSize)
     try {
-      val flatT = parseTdefChained(flatPage, readPage(in, _, PageSize))
+      val flatT = parseTdefChained(l, flatPage, readPage(in, _, l.pageSize))
       val payload = complexPayloadCols(flatT)
       val payloadIdx = payload.map(pc =>
         flatT.columns.indexWhere(_.name == pc.name)).toArray
@@ -294,21 +306,14 @@ object JetMdbSource {
       val pkIdx = flatT.columns.indexWhere(_.autoNumber)
       require(fkIdx >= 0, s"jetmdb: flat table at page $flatPage " +
         "lacks the type-0x12 complex-value key column")
-      var lvalNum = -1
-      var lvalPage: Array[Byte] = null
-      val lval: Int => Array[Byte] = { n =>
-        if (n != lvalNum) {
-          lvalPage = readPage(in, n, PageSize); lvalNum = n
-        }
-        lvalPage
-      }
+      val lval = lastPageCache(in, l.pageSize)
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Long, Any)]
       var pn = 1
       while (pn < pageCount) {
-        val page = readPage(in, pn, PageSize)
-        dataRowExtents(page, flatPage).foreach { case (s0, e0) =>
-          val r = decodeRow(page, s0, e0, flatT, lval)
+        val page = readPage(in, pn, l.pageSize)
+        dataRowExtents(l, page, flatPage).foreach { case (s0, e0) =>
+          val r = decodeRow(l, page, s0, e0, flatT, lval)
           if (r(fkIdx) != null) {
             val vs = new Array[Any](payloadIdx.length)
             var i = 0
@@ -342,39 +347,33 @@ object JetMdbSource {
     } finally in.close()
   }
 
-  /** Resolve `table` → (tdef, Spark schema, pageCount, jet3?,
-    * COMPLEX column name → flat side-table TDEF page). The last map
+  /** Resolve `table` → (tdef, resolved Jet types, Spark schema,
+    * pageCount, layout, COMPLEX column name → flat side-table TDEF
+    * page, dbKey). The map
     * is empty for every table without ACE COMPLEX columns; when one
     * exists, its `ComplexValues(Nil)` placeholder from the format
     * layer is resolved here into the flat table's value-column
     * schema via the MSysComplexColumns catalog (r13). */
   def tableDefFull(path: String, table: String)
       : (JetTableDef, Seq[(String, JetTypes.JetType)], StructType, Int,
-        Boolean, Map[String, Int], Int) = {
-    val (cat, count, jet3, dbKey) = catalogOf(path)
+        JetLayout, Map[String, Int], Int) = {
+    val (cat, count, l, dbKey) = catalogOf(path)
     val entry = cat.find(e => e.name.equalsIgnoreCase(table) && !e.isSystem)
       .getOrElse(throw new IllegalArgumentException(
         s"jetmdb: no user table '$table' in $path " +
           s"(have: ${cat.filter(!_.isSystem).map(_.name).mkString(", ")})"))
-    val in = openDb(path, jet3, dbKey)
-    val ps = if (jet3) Jet3Format.PageSize else PageSize
+    val in = openDb(path, l, dbKey)
+    val page: Int => Array[Byte] = readPage(in, _, l.pageSize)
     try {
       // chained (r12): wide tables spill their TDEF across pages
-      val tdef =
-        if (jet3)
-          Jet3Format.parseTdefChained(
-            entry.tdefPage, readPage(in, _, ps))
-        else parseTdefChained(entry.tdefPage, readPage(in, _, ps))
+      val tdef = parseTdefChained(l, entry.tdefPage, page)
       val (types, flatPages) =
         if (!tdef.columns.exists(_.typeCode == T_COMPLEX))
           (tdef.jetTypes, Map.empty[String, Int])
         else {
-          // COMPLEX postdates Jet3 by a decade; a 0x12 code in a Jet3
-          // TDEF is corruption, and the catalog walk below assumes
-          // Jet4 page geometry — fail before reading garbage
-          require(!jet3, s"jetmdb: COMPLEX column type 0x12 in a " +
-            s"Jet3 (Access 97) file — corrupt TDEF for '$table'")
-          val links = complexCatalogOf(path, cat, count, dbKey)
+          // (a Jet3 TDEF never gets here: COMPLEX postdates Jet3 and
+          // its layout rejects the code at parse time)
+          val links = complexCatalogOf(path, cat, count, l, dbKey)
           val fp = scala.collection.mutable.LinkedHashMap[String, Int]()
           val resolved = tdef.columns.map { c =>
             if (c.typeCode != T_COMPLEX)
@@ -387,7 +386,7 @@ object JetMdbSource {
                     s"=${tdef.tdefPage}, ColumnID=${c.colNum}) — the " +
                     "hidden flat side table cannot be located; " +
                     "flatten the field in Access or export to CSV"))
-              val flatT = parseTdefChained(flat, readPage(in, _, ps))
+              val flatT = parseTdefChained(l, flat, page)
               require(flatT.columns.exists(_.typeCode == T_COMPLEX),
                 s"jetmdb: flat table at page $flat for COMPLEX " +
                   s"column '${c.name}' lacks the type-0x12 key column")
@@ -403,15 +402,8 @@ object JetMdbSource {
       val schema = StructType(types.map { case (n, t) =>
         StructField(n, JetTypes.toSpark(t), nullable = true)
       })
-      (tdef, types, schema, count, jet3, flatPages, dbKey)
+      (tdef, types, schema, count, l, flatPages, dbKey)
     } finally in.close()
-  }
-
-  /** Resolve `table` → (tdef, Spark schema, pageCount, jet3?). */
-  def tableDefV(path: String, table: String)
-      : (JetTableDef, StructType, Int, Boolean) = {
-    val (tdef, _, schema, count, jet3, _, _) = tableDefFull(path, table)
-    (tdef, schema, count, jet3)
   }
 
   /** MSysComplexColumns walk: (ConceptualTableID, ColumnID) →
@@ -427,8 +419,8 @@ object JetMdbSource {
       (String, Long, Long), Map[(Int, Int), Int]]()
 
   private def complexCatalogOf(
-      path: String, cat: Seq[CatalogEntry], count: Int, dbKey: Int)
-      : Map[(Int, Int), Int] = {
+      path: String, cat: Seq[CatalogEntry], count: Int, l: JetLayout,
+      dbKey: Int): Map[(Int, Int), Int] = {
     val h = fs(path)
     val st = h.getFileStatus(new Path(path))
     val key = (path, st.getLen, st.getModificationTime)
@@ -440,9 +432,10 @@ object JetMdbSource {
           "MSysComplexColumns catalog table — the flat side tables " +
           "cannot be located; flatten the field in Access or export " +
           "to CSV (jetcsv)"))
-    val in = openDb(path, jet3 = false, dbKey)
+    val in = openDb(path, l, dbKey)
     try {
-      val sysT = parseTdefChained(sysE.tdefPage, readPage(in, _, PageSize))
+      val sysT =
+        parseTdefChained(l, sysE.tdefPage, readPage(in, _, l.pageSize))
       def idxOf(n: String): Int = {
         val i = sysT.columns.indexWhere(_.name.equalsIgnoreCase(n))
         require(i >= 0, s"jetmdb: MSysComplexColumns lacks column '$n'")
@@ -451,17 +444,12 @@ object JetMdbSource {
       val (iTab, iCol, iFlat) =
         (idxOf("ConceptualTableID"), idxOf("ColumnID"),
           idxOf("FlatTableID"))
-      def asInt(v: Any): Int = v match {
-        case i: Integer => i.intValue()
-        case s: java.lang.Short => s.intValue()
-        case other => String.valueOf(other).toInt
-      }
       // table IDs carry the TDEF page in their low 3 bytes, exactly
       // like MSysObjects Id (readCatalog applies the same mask)
       val links = (1 until count).flatMap { pn =>
-        val page = readPage(in, pn, PageSize)
-        dataRowExtents(page, sysE.tdefPage).map { case (s0, e0) =>
-          val r = decodeRow(page, s0, e0, sysT)
+        val page = readPage(in, pn, l.pageSize)
+        dataRowExtents(l, page, sysE.tdefPage).map { case (s0, e0) =>
+          val r = decodeRow(l, page, s0, e0, sysT)
           (asInt(r(iTab)) & 0x00FFFFFF, asInt(r(iCol))) ->
             (asInt(r(iFlat)) & 0x00FFFFFF)
         }
@@ -475,7 +463,7 @@ object JetMdbSource {
   /** Resolve `table` → (tdef, Spark schema, pageCount). */
   def tableDef(path: String, table: String)
       : (JetTableDef, StructType, Int) = {
-    val (tdef, schema, count, _) = tableDefV(path, table)
+    val (tdef, _, schema, count, _, _, _) = tableDefFull(path, table)
     (tdef, schema, count)
   }
 
@@ -507,22 +495,16 @@ object JetMdbSource {
     * (a database with no relationships). Driver-side: the table holds
     * one row per FK column pair — catalog-sized, never data-sized. */
   def relationships(path: String): Seq[JetRelationshipRow] = {
-    val (cat, count, jet3, dbKey) = catalogOf(path)
-    // Jet3 text columns decode fine through Jet3Format, but this
-    // repo's writer emits relationships only into Jet4 files; the
-    // dispatch below keeps the read honest for both
+    val (cat, count, l, dbKey) = catalogOf(path)
+    // this repo's writer emits relationships only into Jet4 files; a
+    // Jet3 MSysRelationships reads through the same layout-driven walk
     cat.find(e => e.name.equalsIgnoreCase("MSysRelationships")) match {
       case None => Nil
       case Some(entry) =>
-        val in = openDb(path, jet3, dbKey)
-        val ps = if (jet3) Jet3Format.PageSize else PageSize
+        val in = openDb(path, l, dbKey)
         try {
-          val tdef =
-            if (jet3)
-              Jet3Format.parseTdefChained(
-                entry.tdefPage, readPage(in, _, ps))
-            else parseTdefChained(
-              entry.tdefPage, readPage(in, _, ps))
+          val tdef = parseTdefChained(
+            l, entry.tdefPage, readPage(in, _, l.pageSize))
           def idx(n: String): Int = {
             val i = tdef.columns.indexWhere(_.name.equalsIgnoreCase(n))
             require(i >= 0,
@@ -533,26 +515,11 @@ object JetMdbSource {
             (idx("szRelationship"), idx("szObject"), idx("szColumn"),
               idx("szReferencedObject"), idx("szReferencedColumn"),
               idx("icolumn"), idx("ccolumn"), idx("grbit"))
-          var lvalNum = -1
-          var lvalPage: Array[Byte] = null
-          val lval: Int => Array[Byte] = { n =>
-            if (n != lvalNum) { lvalPage = readPage(in, n, ps); lvalNum = n }
-            lvalPage
-          }
-          def asInt(v: Any): Int = v match {
-            case i: Integer => i.intValue()
-            case s: java.lang.Short => s.intValue()
-            case other => String.valueOf(other).toInt
-          }
+          val lval = lastPageCache(in, l.pageSize)
           (1 until count).flatMap { pn =>
-            val page = readPage(in, pn, ps)
-            val extents =
-              if (jet3) Jet3Format.dataRowExtents(page, entry.tdefPage)
-              else dataRowExtents(page, entry.tdefPage)
-            extents.map { case (s, e) =>
-              val row =
-                if (jet3) Jet3Format.decodeRow(page, s, e, tdef, lval)
-                else decodeRow(page, s, e, tdef, lval)
+            val page = readPage(in, pn, l.pageSize)
+            dataRowExtents(l, page, entry.tdefPage).map { case (s, e) =>
+              val row = decodeRow(l, page, s, e, tdef, lval)
               JetRelationshipRow(
                 String.valueOf(row(iName)), String.valueOf(row(iObj)),
                 String.valueOf(row(iCol)), String.valueOf(row(iRefObj)),
@@ -632,13 +599,13 @@ private[jetmdb] final case class JetMdbScan(
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val (tdef, _, _, pageCount, jet3, complexFlat, dbKey) =
+    val (tdef, _, _, pageCount, layout, complexFlat, dbKey) =
       JetMdbSource.tableDefFull(path, table)
     // partition 0 starts at page 1 (page 0 is the header)
     (1 until pageCount by PagesPerSplit).map { start =>
       JetMdbInputPartition(
         start, math.min(start + PagesPerSplit, pageCount),
-        tdef.tdefPage, jet3, pageCount, complexFlat,
+        tdef.tdefPage, layout, pageCount, complexFlat,
         dbKey): InputPartition
     }.toArray
   }
@@ -651,7 +618,7 @@ private[jetmdb] final case class JetMdbScan(
 
 private[jetmdb] final case class JetMdbInputPartition(
     fromPage: Int, untilPage: Int, tdefPage: Int,
-    jet3: Boolean,
+    layout: JetLayout,
     // whole-file page count + COMPLEX column → flat TDEF page: the
     // flat side table's rows live anywhere in the file, not inside
     // this partition's page range, so the index build needs both
@@ -684,8 +651,8 @@ private[jetmdb] final class JetMdbPartitionReader(
     hconf: org.apache.hadoop.conf.Configuration)
   extends PartitionReader[InternalRow] {
 
-  private val pageSize =
-    if (part.jet3) Jet3Format.PageSize else PageSize
+  private val layout = part.layout
+  private val pageSize = layout.pageSize
 
   private val in = JetCrypt.open(
     new Path(path).getFileSystem(hconf), path, part.dbKey, pageSize)
@@ -697,12 +664,8 @@ private[jetmdb] final class JetMdbPartitionReader(
   // close(), and each failed task attempt would strand a descriptor.
   private val (tdef, colIdx, colType, wanted, complexMaps) =
     try {
-      val t =
-        if (part.jet3)
-          Jet3Format.parseTdefChained(part.tdefPage,
-            JetMdbSource.readPage(in, _, pageSize))
-        else parseTdefChained(part.tdefPage,
-          JetMdbSource.readPage(in, _, pageSize))
+      val t = parseTdefChained(layout, part.tdefPage,
+        JetMdbSource.readPage(in, _, pageSize))
       val jetTypes = t.jetTypes.toMap
       val idx: Array[Int] =
         required.fieldNames.map(n => t.columns.indexWhere(_.name == n))
@@ -722,7 +685,7 @@ private[jetmdb] final class JetMdbPartitionReader(
         val name = required.fieldNames(ci)
         if (idx(ci) >= 0 && part.complexFlat.contains(name))
           cm(ci) = JetMdbSource.complexIndexOf(
-            path, hconf, part.complexFlat(name), part.pageCount,
+            path, hconf, layout, part.complexFlat(name), part.pageCount,
             part.dbKey)
         ci += 1
       }
@@ -739,18 +702,7 @@ private[jetmdb] final class JetMdbPartitionReader(
   private var page: Array[Byte] = _
   private var current: GenericInternalRow = _
 
-  // memo/OLE LVAL indirection: payload pages cluster near the rows
-  // that point at them, so a tiny most-recent cache absorbs the
-  // repeated fetches without holding the file in memory
-  private var lvalCachedNum = -1
-  private var lvalCachedPage: Array[Byte] = _
-  private val lvalFetch: Int => Array[Byte] = { n =>
-    if (n != lvalCachedNum) {
-      lvalCachedPage = JetMdbSource.readPage(in, n, pageSize)
-      lvalCachedNum = n
-    }
-    lvalCachedPage
-  }
+  private val lvalFetch = JetMdbSource.lastPageCache(in, pageSize)
 
   override def next(): Boolean = {
     current = null
@@ -758,16 +710,12 @@ private[jetmdb] final class JetMdbPartitionReader(
       if (!rows.hasNext) {
         if (pageNum >= part.untilPage) return false
         page = JetMdbSource.readPage(in, pageNum, pageSize)
-        rows =
-          (if (part.jet3) Jet3Format.dataRowExtents(page, part.tdefPage)
-           else dataRowExtents(page, part.tdefPage)).iterator
+        rows = dataRowExtents(layout, page, part.tdefPage).iterator
         pageNum += 1
       } else {
         val (s, e) = rows.next()
         val decoded =
-          if (part.jet3)
-            Jet3Format.decodeRow(page, s, e, tdef, lvalFetch, wanted)
-          else decodeRow(page, s, e, tdef, lvalFetch, wanted)
+          decodeRow(layout, page, s, e, tdef, lvalFetch, wanted)
         val values = new Array[Any](colIdx.length)
         var i = 0
         while (i < colIdx.length) {

@@ -21,10 +21,10 @@ import graft.sources.jetmdb.JetMdbFormat._
   * MSysRelationships), so multi-table `.mdb` files — real FK pairs
   * included — build incrementally, one table per write.
   * `.option("version", "jet3")` writes the Access-97 format instead
-  * (2048-byte pages, CP1252 text, 255-byte rows — see [[Jet3Write]]
-  * for the profile and its honest scope rejections); fresh AND
-  * append both dispatch on the option, and a version/file mismatch
-  * on append fails loudly in either direction.
+  * through the same code over [[JetLayout.Jet3]] (2048-byte pages,
+  * CP1252 text, 255-byte rows; [[Jet3Write]] holds its type profile
+  * and honest scope rejections); a version/file mismatch on append
+  * fails loudly in either direction.
   *
   * Topology: a `.mdb` is a SINGLE file with an internal catalog, so
   * the two-phase commit stages per-task ROW BLOBS (a trivial
@@ -36,9 +36,10 @@ import graft.sources.jetmdb.JetMdbFormat._
   * interchange/export of bounded tables (the Access side of a
   * migration), never the 100 TB path (that's parquet/JDBC).
   *
-  * Pages follow the same public layout notes as [[JetMdbFormat]]:
-  * header, usage placeholder, MSysObjects TDEF + data, table TDEF,
-  * data pages. Rows must fit one page (Jet's own rule) — oversize
+  * Pages follow the same public layout notes as [[JetMdbFormat]], at
+  * the offsets of the target's [[JetLayout]]: header, usage
+  * placeholder, MSysObjects TDEF + data, table TDEF, data pages.
+  * Rows must fit one page (Jet's own rule) — oversize
   * rows fail with the column to shorten; BIGINT fails at plan time
   * for Jet4 targets (Jet has no 64-bit integer) and writes as the
   * ACE Large Number under `.option("version", "ace")`, which emits
@@ -155,6 +156,18 @@ object JetMdbWrite {
   private def isVarCode(c: Int): Boolean =
     c == T_TEXT || c == T_MEMO || c == T_OLE
 
+  /** Little-endian unsigned `v` in `width` (1 or 2) bytes at `off`. */
+  private def putUw(p: Array[Byte], off: Int, v: Int, width: Int): Unit = {
+    p(off) = v.toByte
+    if (width == 2) p(off + 1) = (v >> 8).toByte
+  }
+
+  /** The (Id, Type, Name) MSysObjects profile this writer maintains. */
+  private[jetmdb] val SysSchema = StructType(Seq(
+    StructField("Id", IntegerType), StructField("Type", ShortType),
+    StructField("Name", StringType)))
+  private[jetmdb] val SysCodes = Array(T_LONG, T_INT, T_TEXT)
+
   /** Text value bytes: plain UTF-16LE — EXCEPT strings whose first
     * char is U+FEFF (a BOM lifted from UTF-8-with-BOM sources), whose
     * plain encoding would START with FF FE, the Jet Unicode-compression
@@ -162,7 +175,7 @@ object JetMdbWrite {
     * compressed representation instead, which expresses every char
     * (wide runs toggle via 00 / 00 00) except NUL — a NUL in such a
     * string is rejected, never misparsed. */
-  private def encodeText(s: String): Array[Byte] = {
+  private[jetmdb] def encodeText(s: String): Array[Byte] = {
     if (s.isEmpty || s.charAt(0) != '\uFEFF')
       s.getBytes(StandardCharsets.UTF_16LE)
     else {
@@ -213,38 +226,44 @@ object JetMdbWrite {
     case _ => 0
   }
 
-  /** Encode one InternalRow per the Jet4 row layout (the inverse of
-    * [[JetMdbFormat.decodeRow]]). */
+  /** Encode one InternalRow per `l`'s row layout (the inverse of
+    * [[JetMdbFormat.decodeRow]]): column count, fixed region in
+    * declaration order, var data, ascending var-offset table + var
+    * count, null bitmask last. */
   def encodeRow(
-      row: InternalRow, schema: StructType, codes: Array[Int]): Array[Byte] = {
+      l: JetLayout, row: InternalRow, schema: StructType,
+      codes: Array[Int]): Array[Byte] = {
+    val w = l.rowIntWidth
     val nCols = codes.length
     val bitmaskSz = (nCols + 7) / 8
     val fixedTotal = codes.map(fixedLen).sum
     val varIdxs = codes.indices.filter(i => isVarCode(codes(i)))
+    def text(i: Int) =
+      l.encodeText(row.getUTF8String(i).toString, schema(i).name)
     val varBytes: Seq[Array[Byte]] = varIdxs.map { i =>
       if (row.isNullAt(i)) Array.emptyByteArray
       else codes(i) match {
-        case T_TEXT => encodeText(row.getUTF8String(i).toString)
-        case T_MEMO => inlineMemo(encodeText(row.getUTF8String(i).toString))
+        case T_TEXT => text(i)
+        case T_MEMO => inlineMemo(text(i))
         case T_OLE => inlineMemo(row.getBinary(i))
       }
     }
     val varTotal = varBytes.map(_.length).sum
     val hasVar = varIdxs.nonEmpty
-    val total = 2 + fixedTotal + varTotal +
-      (if (hasVar) 2 * (varIdxs.length + 1) + 2 else 0) + bitmaskSz
-    if (total > PageSize - 16)
+    val total = w + fixedTotal + varTotal +
+      (if (hasVar) w * (varIdxs.length + 2) else 0) + bitmaskSz
+    if (total > l.maxRowBytes)
       throw new java.io.IOException(
-        s"jetmdb: row of $total bytes exceeds the Jet4 page capacity " +
-          s"(${PageSize - 16}); shorten text columns " +
-          varIdxs.map(schema(_).name).mkString("(", ", ", ")"))
+        s"${l.prefix}: row of $total bytes exceeds the $l page " +
+          s"capacity for one row (${l.maxRowBytes}); shorten text " +
+          "columns " + varIdxs.map(schema(_).name).mkString("(", ", ", ")"))
     val r = new Array[Byte](total)
     val b = ByteBuffer.wrap(r).order(ByteOrder.LITTLE_ENDIAN)
-    b.putShort(0, nCols.toShort)
+    putUw(r, 0, nCols, w)
     val mask = new Array[Byte](bitmaskSz)
     def setBit(i: Int): Unit =
       mask(i / 8) = (mask(i / 8) | (1 << (i % 8))).toByte
-    var off = 2
+    var off = w
     var i = 0
     while (i < nCols) {
       val code = codes(i)
@@ -304,7 +323,7 @@ object JetMdbWrite {
       i += 1
     }
     // var data + ascending offset table + count
-    var vOff = 2 + fixedTotal
+    var vOff = w + fixedTotal
     val varOffsets = new Array[Int](varIdxs.length + 1)
     varIdxs.zipWithIndex.foreach { case (ci, vi) =>
       varOffsets(vi) = vOff
@@ -316,10 +335,10 @@ object JetMdbWrite {
     val tail = total - bitmaskSz
     if (hasVar) {
       varOffsets(varIdxs.length) = vOff
-      b.putShort(tail - 2, varIdxs.length.toShort)
-      val tabOff = tail - 2 - 2 * (varIdxs.length + 1)
+      putUw(r, tail - w, varIdxs.length, w)
+      val tabOff = tail - w * (varIdxs.length + 2)
       varOffsets.zipWithIndex.foreach { case (o, k) =>
-        b.putShort(tabOff + 2 * k, o.toShort)
+        putUw(r, tabOff + w * k, o, w)
       }
     }
     System.arraycopy(mask, 0, r, tail, bitmaskSz)
@@ -336,16 +355,13 @@ object JetMdbWrite {
     * schema`'s PRIMARY KEY / CREATE INDEX output), which is what a
     * migration consumes; Jet itself rebuilds trees on compact. */
   /** Single-page TDEF (callers that must stay single-page: the
-      catalog). Wide schemas spill via [[tdefPages]]. */
+      system tables). Wide schemas spill via [[tdefPages]]. */
   def tdefPage(
-      schema: StructType, codes: Array[Int], numRows: Int,
-      system: Boolean,
-      indexes: Seq[JetMdbFormat.JetIndex] = Nil,
-      autoNumbers: Set[String] = Set.empty): Array[Byte] = {
-    val buf = tdefBuffer(schema, codes, numRows, system, indexes,
-      autoNumbers)
-    require(buf.length <= PageSize,
-      "jetmdb: schema too wide for a single TDEF page")
+      l: JetLayout, schema: StructType, codes: Array[Int], numRows: Int,
+      system: Boolean): Array[Byte] = {
+    val buf = tdefBuffer(l, schema, codes, numRows, system, Nil, Set.empty)
+    require(buf.length <= l.pageSize,
+      s"${l.prefix}: schema too wide for a single TDEF page")
     buf
   }
 
@@ -358,24 +374,25 @@ object JetMdbWrite {
     * 25-byte descriptors + UCS-2 names overflow 4096 past ~110
     * columns) need this — the r11 writer rejected them. */
   def tdefPages(
-      schema: StructType, codes: Array[Int], numRows: Int,
+      l: JetLayout, schema: StructType, codes: Array[Int], numRows: Int,
       system: Boolean, indexes: Seq[JetMdbFormat.JetIndex],
       autoNumbers: Set[String], headPage: Int): Seq[Array[Byte]] = {
-    val buf = tdefBuffer(schema, codes, numRows, system, indexes,
+    val ps = l.pageSize
+    val buf = tdefBuffer(l, schema, codes, numRows, system, indexes,
       autoNumbers)
-    if (buf.length <= PageSize) Seq(buf)
+    if (buf.length <= ps) Seq(buf)
     else {
-      val chunk = PageSize - 8
-      val nCont = (buf.length - PageSize + chunk - 1) / chunk
-      val head = java.util.Arrays.copyOfRange(buf, 0, PageSize)
+      val chunk = ps - 8
+      val nCont = (buf.length - ps + chunk - 1) / chunk
+      val head = java.util.Arrays.copyOfRange(buf, 0, ps)
       ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
         .putInt(4, headPage + 1)
       head +: (0 until nCont).map { k =>
-        val pg = new Array[Byte](PageSize)
+        val pg = new Array[Byte](ps)
         pg(0) = 0x02; pg(1) = 0x01
         ByteBuffer.wrap(pg).order(ByteOrder.LITTLE_ENDIAN)
           .putInt(4, if (k == nCont - 1) 0 else headPage + 2 + k)
-        val from = PageSize + k * chunk
+        val from = ps + k * chunk
         System.arraycopy(buf, from, pg, 8,
           math.min(chunk, buf.length - from))
         pg
@@ -384,67 +401,77 @@ object JetMdbWrite {
   }
 
   private def tdefBuffer(
-      schema: StructType, codes: Array[Int], numRows: Int,
+      l: JetLayout, schema: StructType, codes: Array[Int], numRows: Int,
       system: Boolean,
       indexes: Seq[JetMdbFormat.JetIndex],
       autoNumbers: Set[String]): Array[Byte] =
-    try tdefBuffer0(schema, codes, numRows, system, indexes,
+    try tdefBuffer0(l, schema, codes, numRows, system, indexes,
       autoNumbers)
     catch {
       // name/descriptor writes bound-check before the final require
       // can fire — surface the budget, not a raw AIOOBE (r12 review)
       case _: IndexOutOfBoundsException =>
         throw new IllegalArgumentException(
-          "jetmdb: TDEF (descriptors + column/index names) exceeds " +
-            "the writer's 8-page budget — shorten column/index names")
+          s"${l.prefix}: TDEF (descriptors + column/index names) " +
+            "exceeds the writer's 8-page budget — shorten column/index " +
+            "names")
     }
 
   private def tdefBuffer0(
-      schema: StructType, codes: Array[Int], numRows: Int,
+      l: JetLayout, schema: StructType, codes: Array[Int], numRows: Int,
       system: Boolean,
       indexes: Seq[JetMdbFormat.JetIndex],
       autoNumbers: Set[String]): Array[Byte] = {
-    val p = new Array[Byte](PageSize * 8)
+    val p = new Array[Byte](l.pageSize * 8)
     val b = ByteBuffer.wrap(p).order(ByteOrder.LITTLE_ENDIAN)
     p(0) = 0x02; p(1) = 0x01
-    b.putInt(16, numRows)
-    p(40) = if (system) 0x53.toByte else 0x4e.toByte
+    b.putInt(l.numRowsOff, numRows)
+    p(l.tableTypeOff) = if (system) 0x53.toByte else 0x4e.toByte
     val nVar = codes.count(isVarCode)
-    b.putShort(41, codes.length.toShort)
-    b.putShort(43, nVar.toShort)
-    b.putShort(45, codes.length.toShort)
-    b.putInt(47, indexes.length) // num_idx (logical)
-    b.putInt(51, indexes.length) // num_real_idx (physical)
-    var off = 63 + indexes.length * 8 // 8-byte per-real-index headers (zero)
+    b.putShort(l.maxColsOff, codes.length.toShort)
+    b.putShort(l.numVarColsOff, nVar.toShort)
+    b.putShort(l.numColsOff, codes.length.toShort)
+    b.putInt(l.numIdxOff, indexes.length) // logical
+    b.putInt(l.numRealIdxOff, indexes.length) // physical
+    // 8-byte per-real-index headers (zero) before the descriptors
+    var off = l.colStart + indexes.length * 8
     var fOff = 0
     var vIdx = 0
     codes.zipWithIndex.foreach { case (code, i) =>
       p(off) = code.toByte
-      b.putShort(off + 5, i.toShort)
-      if (isVarCode(code)) { b.putShort(off + 7, vIdx.toShort); vIdx += 1 }
-      b.putShort(off + 9, i.toShort)
+      b.putShort(off + l.descColNum, i.toShort)
+      if (isVarCode(code)) {
+        b.putShort(off + l.descOffV, vIdx.toShort); vIdx += 1
+      }
+      b.putShort(off + l.descColNum2, i.toShort)
       if (code == T_NUMERIC) {
         val dt = schema(i).dataType.asInstanceOf[DecimalType]
-        p(off + 11) = dt.precision.toByte
-        p(off + 12) = dt.scale.toByte
+        p(off + l.descPrec) = dt.precision.toByte
+        p(off + l.descPrec + 1) = dt.scale.toByte
       }
       val fixed = !isVarCode(code)
       val auto =
         if (autoNumbers.contains(schema(i).name)) 0x04 else 0x00
-      p(off + 17) = ((if (fixed) 0x01 else 0x00) | 0x02 | auto).toByte
+      p(off + l.descFlags) =
+        ((if (fixed) 0x01 else 0x00) | 0x02 | auto).toByte
       if (fixed && code != T_BOOL) {
-        b.putShort(off + 19, fOff.toShort)
+        b.putShort(off + l.descOffF, fOff.toShort)
         fOff += fixedLen(code)
       }
-      b.putShort(off + 21, fixedLen(code).toShort)
-      off += 25
+      b.putShort(off + l.descLen, fixedLen(code).toShort)
+      off += l.descSize
     }
-    schema.fields.foreach { f =>
-      val nb = f.name.getBytes(StandardCharsets.UTF_16LE)
-      b.putShort(off, nb.length.toShort)
-      System.arraycopy(nb, 0, p, off + 2, nb.length)
-      off += 2 + nb.length
+    // names: length prefix + the layout's name bytes
+    val maxName = (1 << (8 * l.nameLenWidth)) - 1
+    def putName(name: String): Unit = {
+      val nb = l.encodeName(name)
+      require(nb.length <= maxName,
+        s"${l.prefix}: name '$name' longer than $maxName bytes")
+      putUw(p, off, nb.length, l.nameLenWidth)
+      System.arraycopy(nb, 0, p, off + l.nameLenWidth, nb.length)
+      off += l.nameLenWidth + nb.length
     }
+    schema.fieldNames.foreach(putName)
     // index section (the reader's parseTdef documents the layout):
     // physical entries, then logical entries, then names
     val colNumOf = schema.fieldNames.zipWithIndex.toMap
@@ -477,20 +504,15 @@ object JetMdbWrite {
       p(off) = (if (ix.primary) 0x01 else 0x00).toByte
       off += 1
     }
-    indexes.foreach { ix =>
-      val nb = ix.name.getBytes(StandardCharsets.UTF_16LE)
-      b.putShort(off, nb.length.toShort)
-      System.arraycopy(nb, 0, p, off + 2, nb.length)
-      off += 2 + nb.length
-    }
+    indexes.foreach(ix => putName(ix.name))
     require(off <= p.length,
-      s"jetmdb: TDEF exceeds ${p.length / PageSize} pages")
+      s"${l.prefix}: TDEF exceeds ${p.length / l.pageSize} pages")
     // tdef_len @8: the documented logical length — external tooling
     // sizes multi-page TDEFs by it (r12 review; the reader follows
     // next pointers and checks it nowhere)
     b.putInt(8, off)
     // trim to the logical length (never below one page)
-    java.util.Arrays.copyOfRange(p, 0, math.max(off, PageSize))
+    java.util.Arrays.copyOfRange(p, 0, math.max(off, l.pageSize))
   }
 
   /** Parse the writer's `.option("indexes", …)` spec:
@@ -540,9 +562,6 @@ object JetMdbWrite {
         (parts(0), cols(i), refTable, refCols(i), i, cols.length, grbit)
       }
     }
-
-  /** The Jet 2 GB file cap, in pages. */
-  val MaxPages: Int = (2L * 1024 * 1024 * 1024 / PageSize).toInt
 }
 
 private[jetmdb] final class JetMdbWriteBuilder(
@@ -566,7 +585,6 @@ private[jetmdb] final class JetMdbWriteBuilder(
       require(version == "jet4" || version == "jet3" ||
         version == "ace",
         s"jetmdb: unknown version '$version' (jet4 | jet3 | ace)")
-      val jet3 = version == "jet3"
       val ace = version == "ace"
       val memoCols = Option(info.options.get("memocolumns"))
         .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
@@ -588,23 +606,13 @@ private[jetmdb] final class JetMdbWriteBuilder(
         require(dt == TimestampType || dt == TimestampNTZType,
           s"jetmdb: datextColumns column '$c' is not a timestamp")
       }
-      // plan-time validation (per version — Jet3 has no MEMO/OLE/
-      // NUMERIC and its reader skips index sections, so the metadata
-      // options reject rather than write what cannot round-trip)
-      if (jet3) {
-        require(memoCols.isEmpty,
-          "jetmdb/jet3: memoColumns — Jet3 MEMO uses long-value " +
-            "pointer forms outside the documented profile; write Jet4")
-        Seq("indexes", "relationships", "autonumber").foreach { opt =>
-          require(info.options.get(opt) == null,
-            s"jetmdb/jet3: .option(\"$opt\", …) — the Jet3 profile " +
-              "carries no index/relationship metadata (its reader " +
-              "skips those sections, so a write could not be " +
-              "verified); write Jet4 for metadata-bearing exports")
-        }
-        schema.fields.foreach(Jet3Write.jetCode3)
-      } else schema.fields.foreach(
-        JetMdbWrite.jetCode(_, memoCols, ace, datextCols))
+      // plan-time validation: the column codes, checked once here and
+      // carried to every task and the commit
+      val (layout, codes) =
+        if (version == "jet3")
+          (JetLayout.Jet3, Jet3Write.codes(schema, info.options, memoCols))
+        else (JetLayout.Jet4, schema.fields.map(
+          JetMdbWrite.jetCode(_, memoCols, ace, datextCols)))
       val table = info.options.getOrDefault("table", null)
       require(table != null,
         "jetmdb: .option(\"table\", <name>) is required to write")
@@ -639,9 +647,8 @@ private[jetmdb] final class JetMdbWriteBuilder(
         require(schema(c).dataType == IntegerType,
           s"jetmdb: autonumber column '$c' must be LONG (IntegerType)")
       }
-      JetMdbBatchWrite(path, table, schema, memoCols, datextCols,
-        indexes, rels,
-        autoNums, overwrite, jet3, ace,
+      JetMdbBatchWrite(path, table, schema, codes, indexes, rels,
+        autoNums, overwrite, layout, ace,
         new SerializableConfiguration(SparkSession.active
           .sparkContext.hadoopConfiguration))
     }
@@ -652,22 +659,23 @@ private[jetmdb] final case class JetMdbBatchWrite(
     path: String,
     table: String,
     schema: StructType,
-    memoCols: Set[String],
-    datextCols: Set[String],
+    codes: Array[Int],
     indexes: Seq[JetMdbFormat.JetIndex],
     relationships: Seq[(String, String, String, String, Int, Int, Int)],
     autoNumbers: Set[String],
     overwrite: Boolean,
-    jet3: Boolean,
+    layout: JetLayout,
     ace: Boolean,
     conf: SerializableConfiguration) extends BatchWrite {
+
+  import JetMdbWrite.{SysCodes, SysSchema}
 
   private val stagingName = s".staging-${UUID.randomUUID().toString}"
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    JetMdbWriterFactory(path, stagingName, schema, memoCols,
-      datextCols, jet3, ace, conf)
+    JetMdbWriterFactory(path, stagingName, schema, codes, layout, ace,
+      conf)
 
   private val relSchema = StructType(Seq(
     StructField("ccolumn", IntegerType),
@@ -686,7 +694,7 @@ private[jetmdb] final case class JetMdbBatchWrite(
     import org.apache.spark.unsafe.types.UTF8String
     relationships.map {
       case (name, col, refTable, refCol, icol, ccol, grbit) =>
-        JetMdbWrite.encodeRow(
+        JetMdbWrite.encodeRow(layout,
           IRow(ccol, grbit, icol, UTF8String.fromString(col),
             UTF8String.fromString(table),
             UTF8String.fromString(refCol),
@@ -696,6 +704,9 @@ private[jetmdb] final case class JetMdbBatchWrite(
     }
   }
 
+  private def pack(rows: Iterator[Array[Byte]], owner: Int) =
+    JetMdbPagePacker.pack(layout, rows, owner)
+
   /** Stream staged row blobs into Jet pages; O(page) memory for the
     * fresh (overwrite) path; the append path additionally holds the
     * EXISTING file's pages (bounded by Jet's own 2 GB format cap —
@@ -704,10 +715,6 @@ private[jetmdb] final case class JetMdbBatchWrite(
     val fs = new Path(path).getFileSystem(conf.value)
     val parent = new Path(path).getParent
     val staging = new Path(parent, stagingName)
-    val codes =
-      if (jet3) schema.fields.map(Jet3Write.jetCode3)
-      else schema.fields.map(
-        JetMdbWrite.jetCode(_, memoCols, ace, datextCols))
     val parts = messages.collect {
       case m: JetMdbCommit if m.file != null => m
     }
@@ -715,38 +722,19 @@ private[jetmdb] final case class JetMdbBatchWrite(
     val tmpOut = new Path(parent, s"$stagingName.mdb")
     val out = fs.create(tmpOut, true)
     var pageCount = 0
-    val maxPages =
-      if (jet3) Jet3Write.MaxPages3 else JetMdbWrite.MaxPages
     def writePage(p: Array[Byte]): Unit = {
-      if (pageCount >= maxPages)
+      if (pageCount >= layout.maxPages)
         throw new java.io.IOException(
-          (if (jet3) "jetmdb/jet3: output exceeds Jet3's 1 GB " +
-            "database cap"
-          else "jetmdb: output exceeds Jet's 2 GB database cap") +
-            " — this sink is for bounded interchange tables " +
-            "(use parquet/JDBC)")
+          s"${layout.prefix}: output exceeds $layout's " +
+            s"${layout.maxFileBytes >> 30} GB database cap — this sink " +
+            "is for bounded interchange tables (use parquet/JDBC)")
       out.write(p); pageCount += 1
     }
     val appending = !overwrite && fs.exists(new Path(path))
     try {
-      if (jet3) {
-        val blobs = parts.iterator.flatMap { m =>
-          JetMdbBlobIO.readBlobs(fs, new Path(staging, m.file))
-        }
-        val rows = math.min(numRows, Int.MaxValue.toLong).toInt
-        if (appending) {
-          val st = fs.getFileStatus(new Path(path))
-          require(st.getLen % Jet3Format.PageSize == 0,
-            s"jetmdb/jet3 append: $path is not 2048-page-aligned " +
-              s"(${st.getLen} bytes)")
-          val pages = readPages(fs, st.getLen, Jet3Format.PageSize)
-          Jet3Write.appendPages3(pages, table, schema, codes, rows,
-            blobs, writePage)
-        } else Jet3Write.freshPages3(table, schema, codes, rows, blobs,
-          writePage)
-      } else if (appending) {
-        appendPages(fs, staging, codes, parts, numRows, writePage)
-      } else freshPages(fs, staging, codes, parts, numRows, writePage)
+      if (appending)
+        appendPages(fs, staging, parts, numRows, writePage)
+      else freshPages(fs, staging, parts, numRows, writePage)
     } finally out.close()
     if (fs.exists(new Path(path)) && !fs.delete(new Path(path), false))
       throw new java.io.IOException(s"jetmdb: cannot replace $path")
@@ -756,30 +744,22 @@ private[jetmdb] final case class JetMdbBatchWrite(
     fs.delete(staging, true)
   }
 
-  /** Every page of the existing `path`, read in order through one
-    * open stream (the append paths splice into a full in-memory copy). */
-  private def readPages(fs: org.apache.hadoop.fs.FileSystem, len: Long,
-      pageSize: Int): Array[Array[Byte]] = {
-    val in = fs.open(new Path(path))
-    try Array.tabulate((len / pageSize).toInt)(
-      JetMdbSource.readPage(in, _, pageSize))
-    finally in.close()
-  }
-
   /** APPEND path — multi-table `.mdb` construction: copy the existing
-    * database's pages, add the new table's TDEF (+ index section) and
-    * data pages, rebuild the single catalog data page with the new
-    * entries, and fold any declared relationships into the existing
-    * MSysRelationships (new data pages under its existing TDEF owner —
-    * the reader's extent walk discovers them by owner, so nothing
-    * already on disk moves). Jet4 files only; a same-named table is
+    * database's pages (read in order through one open stream), add
+    * the new table's TDEF (+ index section) and data pages, rebuild
+    * the single catalog data page with the new entries, and fold any
+    * declared relationships into the existing MSysRelationships (new
+    * data pages under its existing TDEF owner — the reader's extent
+    * walk discovers them by owner, so nothing already on disk moves).
+    * The file must be of the requested version; a same-named table is
     * rejected, never replaced. */
   private def appendPages(
       fs: org.apache.hadoop.fs.FileSystem, staging: Path,
-      codes: Array[Int], parts: Array[JetMdbCommit], numRows: Long,
+      parts: Array[JetMdbCommit], numRows: Long,
       writePage: Array[Byte] => Unit): Unit = {
     import org.apache.spark.sql.catalyst.{InternalRow => IRow}
     import org.apache.spark.unsafe.types.UTF8String
+    val pre = s"${layout.prefix} append"
     // complex columns write fresh files only (r13): appending would
     // have to fold flat tables into an existing MSysComplexColumns
     // and re-home its data page — honest rejection over a half-built
@@ -789,14 +769,23 @@ private[jetmdb] final case class JetMdbBatchWrite(
         "unsupported — write the table to a fresh .accdb " +
         "(mode(\"overwrite\"))")
     val st = fs.getFileStatus(new Path(path))
-    require(st.getLen % PageSize == 0,
-      s"jetmdb append: $path is not page-aligned (${st.getLen} bytes)")
-    val pages = readPages(fs, st.getLen, PageSize)
+    require(st.getLen % layout.pageSize == 0,
+      s"$pre: $path is not ${layout.pageSize}-byte-page-aligned " +
+        s"(${st.getLen} bytes)")
+    val pages = {
+      val in = fs.open(new Path(path))
+      try Array.tabulate((st.getLen / layout.pageSize).toInt)(
+        JetMdbSource.readPage(in, _, layout.pageSize))
+      finally in.close()
+    }
     val oldCount = pages.length
-    checkHeader(pages(0))
     // the requested version must MATCH the file on disk: appending
     // Jet4-declared tables into an .accdb (or vice versa) would leave
     // a file whose new columns lie about their format family (r12)
+    val onDisk = JetLayout.of(pages(0))
+    require(onDisk == layout,
+      s"$pre: target is not a $layout database (it is $onDisk) — " +
+        "append with the version the file was written with")
     require(JetMdbFormat.isAce(pages(0)) == ace,
       if (ace)
         "jetmdb append: .option(\"version\", \"ace\") targets a " +
@@ -804,9 +793,6 @@ private[jetmdb] final case class JetMdbBatchWrite(
       else
         "jetmdb append: target is an ACE (.accdb) file — append " +
           "with .option(\"version\", \"ace\")")
-    require(ace || u8(pages(0), 0x14) == 0x01,
-      "jetmdb append: target is not a Jet4 file — append to a Jet3 " +
-        "database with .option(\"version\", \"jet3\")")
     // an RC4-scrambled target (r14: readable since JetCrypt) must
     // reject HERE: this path copies and splices pages in the clear,
     // so appending would interleave plaintext pages into a scrambled
@@ -814,40 +800,40 @@ private[jetmdb] final case class JetMdbBatchWrite(
     // the misleading noise-parse diagnostic (r14 review: the read
     // path's "retried automatically" hint is false for appends).
     val sysTdef =
-      try parseTdefChained(2, pages(_))
+      try parseTdefChained(layout, 2, pages(_))
       catch {
         case e: RuntimeException
-            if JetCrypt.candidateKey(pages(0), jet3 = false) != 0 =>
+            if JetCrypt.candidateKey(pages(0), layout) != 0 =>
           throw new UnsupportedOperationException(
-            "jetmdb append: the target file is RC4-page-scrambled " +
+            s"$pre: the target file is RC4-page-scrambled " +
               "(encrypted) — appending would interleave plaintext " +
               "pages; read it and overwrite to a fresh file instead",
             e)
       }
     require(sysTdef.columns.map(c => (c.name, c.typeCode)) == Seq(
       ("Id", T_LONG), ("Type", T_INT), ("Name", T_TEXT)),
-      "jetmdb append: page-2 catalog TDEF is not the (Id, Type, Name) " +
+      s"$pre: page-2 catalog TDEF is not the (Id, Type, Name) " +
         "profile this writer maintains")
     // existing catalog rows + the single catalog data page they live on
     var catPageNum = -1
     val oldCat = (1 until oldCount).flatMap { pn =>
-      val extents = dataRowExtents(pages(pn), 2)
+      val extents = dataRowExtents(layout, pages(pn), 2)
       if (extents.nonEmpty) {
         require(catPageNum == -1 || catPageNum == pn,
-          "jetmdb append: multi-page catalogs are out of this " +
-            "writer's single-page discipline")
+          s"$pre: multi-page catalogs are out of this writer's " +
+            "single-page discipline")
         catPageNum = pn
       }
       extents.map { case (rs, re) =>
-        val row = decodeRow(pages(pn), rs, re, sysTdef)
+        val row = decodeRow(layout, pages(pn), rs, re, sysTdef)
         (row(0).asInstanceOf[Integer].intValue(),
           row(1).asInstanceOf[Short].toInt,
           String.valueOf(row(2)))
       }
     }
-    require(catPageNum > 0, "jetmdb append: no catalog data page found")
+    require(catPageNum > 0, s"$pre: no catalog data page found")
     require(!oldCat.exists(_._3.equalsIgnoreCase(table)),
-      s"jetmdb append: table '$table' already exists in $path " +
+      s"$pre: table '$table' already exists in $path " +
         "(append adds tables, never replaces — overwrite mode rewrites " +
         "the database)")
     val existingRelTdef = oldCat
@@ -855,7 +841,7 @@ private[jetmdb] final case class JetMdbBatchWrite(
     val newTdefPage = oldCount
     // wide schemas chain TDEF continuation pages behind the head
     // (r12) — the rel TDEF page shifts past the whole chain
-    val newTableTdef = JetMdbWrite.tdefPages(schema, codes,
+    val newTableTdef = JetMdbWrite.tdefPages(layout, schema, codes,
       math.min(numRows, Int.MaxValue.toLong).toInt, system = false,
       indexes, autoNumbers, headPage = newTdefPage)
     // a fresh MSysRelationships TDEF lands right after the new table's
@@ -864,180 +850,167 @@ private[jetmdb] final case class JetMdbBatchWrite(
       if (relationships.nonEmpty && existingRelTdef.isEmpty)
         Some(newTdefPage + newTableTdef.length)
       else None
-    val sysSchema = StructType(Seq(
-      StructField("Id", IntegerType), StructField("Type", ShortType),
-      StructField("Name", StringType)))
-    val sysCodes = Array(T_LONG, T_INT, T_TEXT)
     val catRows = (oldCat.map { case (id, tp, nm) =>
       IRow(id, tp.toShort, UTF8String.fromString(nm))
     } :+ IRow(newTdefPage, 1.toShort, UTF8String.fromString(table))) ++
       newRelTdefPage.map(rp =>
         IRow(rp, 3.toShort, UTF8String.fromString("MSysRelationships")))
-    val newCatPages = JetMdbPagePacker.pack(
-      catRows.map(JetMdbWrite.encodeRow(_, sysSchema, sysCodes)).iterator,
+    val newCatPages = pack(catRows.map(
+      JetMdbWrite.encodeRow(layout, _, SysSchema, SysCodes)).iterator,
       2).toSeq
     require(newCatPages.size == 1,
-      "jetmdb append: catalog no longer fits its single page — the " +
-        "database has reached this writer's table-count capacity")
+      s"$pre: catalog no longer fits its single page — the database " +
+        "has reached this writer's table-count capacity")
     // MSysObjects TDEF row count goes stale on page 2 — patch it, and
     // the existing MSysRelationships TDEF's count when rows fold in
-    val page2 = pages(2).clone()
-    java.nio.ByteBuffer.wrap(page2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(16, catRows.size)
-    pages(2) = page2
-    existingRelTdef.foreach { rp =>
-      if (relationships.nonEmpty) {
-        val rt = pages(rp).clone()
-        val bb = java.nio.ByteBuffer.wrap(rt)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.putInt(16, i32(rt, 16) + relationships.size)
-        pages(rp) = rt
-      }
+    def patchRows(pn: Int, rows: Int): Unit = {
+      val pg = pages(pn).clone()
+      ByteBuffer.wrap(pg).order(ByteOrder.LITTLE_ENDIAN)
+        .putInt(layout.numRowsOff, rows)
+      pages(pn) = pg
     }
+    patchRows(2, catRows.size)
+    if (relationships.nonEmpty)
+      existingRelTdef.foreach(rp => patchRows(rp,
+        i32(pages(rp), layout.numRowsOff) + relationships.size))
     // emit: existing pages (catalog page swapped), new table TDEF,
     // optional new rel TDEF, new rel data pages, new table data pages
     pages(catPageNum) = newCatPages.head
     pages.foreach(writePage)
     newTableTdef.foreach(writePage)
     newRelTdefPage.foreach { _ =>
-      writePage(JetMdbWrite.tdefPage(relSchema, relCodes,
+      writePage(JetMdbWrite.tdefPage(layout, relSchema, relCodes,
         relationships.size, system = true))
     }
     if (relationships.nonEmpty) {
       val owner = existingRelTdef.orElse(newRelTdefPage).get
-      JetMdbPagePacker.pack(relRowBytes().iterator, owner)
-        .foreach(writePage)
+      pack(relRowBytes().iterator, owner).foreach(writePage)
     }
     val blobIter = parts.iterator.flatMap { m =>
       JetMdbBlobIO.readBlobs(fs, new Path(staging, m.file))
     }
-    JetMdbPagePacker.pack(blobIter, newTdefPage).foreach(writePage)
+    pack(blobIter, newTdefPage).foreach(writePage)
   }
 
   private def freshPages(
       fs: org.apache.hadoop.fs.FileSystem, staging: Path,
-      codes: Array[Int], parts: Array[JetMdbCommit], numRows: Long,
+      parts: Array[JetMdbCommit], numRows: Long,
       writePage: Array[Byte] => Unit): Unit = {
-    {
-      // pages 0-1: header + usage placeholder (ACE: its magic +
-      // version 0x02 — everything past page 0 is the Jet4 layout)
-      val hdr = new Array[Byte](PageSize)
-      hdr(0) = 0x00; hdr(1) = 0x01
-      val magic = (if (ace) MagicAce else Magic)
-        .getBytes(StandardCharsets.US_ASCII)
-      System.arraycopy(magic, 0, hdr, 4, magic.length)
-      hdr(0x14) = (if (ace) 0x02 else 0x01).toByte
-      writePage(hdr)
-      val usage = new Array[Byte](PageSize)
-      usage(0) = 0x05; usage(1) = 0x01
-      writePage(usage)
-      // pages 2-3: catalog (MSysObjects at page 2; user TDEF at 4;
-      // MSysRelationships TDEF at 5 when relationships were declared)
-      import org.apache.spark.sql.catalyst.{InternalRow => IRow}
-      import org.apache.spark.unsafe.types.UTF8String
-      val sysSchema = StructType(Seq(
-        StructField("Id", IntegerType), StructField("Type", ShortType),
-        StructField("Name", StringType)))
-      val sysCodes = Array(T_LONG, T_INT, T_TEXT)
-      writePage(JetMdbWrite.tdefPage(sysSchema, sysCodes, 2, system = true))
-      // page 4: user TDEF head (wide schemas chain continuation
-      // pages right behind it — r12), so the rel TDEF page number
-      // must be computed from the chain length BEFORE the catalog
-      // row that names it is written
-      val userTdef = JetMdbWrite.tdefPages(schema, codes,
-        math.min(numRows, Int.MaxValue.toLong).toInt, system = false,
-        indexes, autoNumbers, headPage = 4)
-      val relTdefPage = 4 + userTdef.length
-      // relationships data pages materialize up front (catalog-sized)
-      // so every later TDEF page number is known before the catalog
-      // page is written
-      val relDataPages =
-        if (relationships.isEmpty) Nil
-        else JetMdbPagePacker.pack(relRowBytes().iterator, relTdefPage)
-          .toSeq
-      // ACE COMPLEX columns (r13): one hidden flat table per complex
-      // column (TDEF chain + data pages owned by its head), then the
-      // MSysComplexColumns catalog table linking (main TDEF page 4,
-      // column ordinal) → flat head — exactly what the reader's
-      // resolveComplex walk expects
-      val complexCols = codes.indices.filter(
-        codes(_) == JetMdbFormat.T_COMPLEX)
-      var cursor = relTdefPage +
-        (if (relationships.isEmpty) 0 else 1 + relDataPages.size)
-      val flats = complexCols.map { ci =>
-        val (fname, fschema, fcodes) =
-          JetMdbWrite.complexFlatSpec(table, schema(ci), ace)
-        val nFlat = parts.map(
-          _.complex.get(ci).map(_._2).getOrElse(0L)).sum
-        val pages = JetMdbWrite.tdefPages(fschema, fcodes,
-          math.min(nFlat, Int.MaxValue.toLong).toInt, system = true,
-          Nil, Set("pk"), headPage = cursor)
-        val head = cursor
-        cursor += pages.length
-        (ci, fname, pages, head)
-      }
-      val ccTdefPage = cursor
-      val ccSchema = StructType(Seq(
-        StructField("ConceptualTableID", IntegerType),
-        StructField("ColumnID", IntegerType),
-        StructField("FlatTableID", IntegerType),
-        StructField("ComplexTypeObjectID", IntegerType)))
-      val ccCodes = Array(T_LONG, T_LONG, T_LONG, T_LONG)
-      val ccDataPages =
-        if (flats.isEmpty) Nil
-        else JetMdbPagePacker.pack(flats.map { case (ci, _, _, head) =>
-          JetMdbWrite.encodeRow(IRow(4, ci, head, 0), ccSchema, ccCodes)
-        }.iterator, ccTdefPage).toSeq
-      val catRows = (Seq(
-        IRow(2, 3.toShort, UTF8String.fromString("MSysObjects")),
-        IRow(4, 1.toShort, UTF8String.fromString(table))) ++
-        (if (relationships.nonEmpty)
-          Seq(IRow(relTdefPage, 3.toShort,
-            UTF8String.fromString("MSysRelationships")))
-        else Nil) ++
-        flats.map { case (_, fname, _, head) =>
-          IRow(head, 3.toShort, UTF8String.fromString(fname))
-        } ++
-        (if (flats.nonEmpty)
-          Seq(IRow(ccTdefPage, 3.toShort,
-            UTF8String.fromString("MSysComplexColumns")))
-        else Nil))
-        .map(JetMdbWrite.encodeRow(_, sysSchema, sysCodes))
-      val catPages = JetMdbPagePacker.pack(catRows.iterator, 2).toSeq
-      require(catPages.size == 1, "jetmdb: catalog must fit one page")
-      catPages.foreach(writePage)
-      // user TDEF chain, then — if declared — the MSysRelationships
-      // TDEF + data, then the complex flat TDEFs + MSysComplexColumns
-      // + flat data, then the user data pages (owner = 4, the chain
-      // HEAD). Owners make page order irrelevant to the extent walk.
-      userTdef.foreach(writePage)
-      if (relationships.nonEmpty) {
-        writePage(JetMdbWrite.tdefPage(relSchema, relCodes,
-          relationships.size, system = true))
-        relDataPages.foreach(writePage)
-      }
-      flats.foreach { case (_, _, pages, _) => pages.foreach(writePage) }
-      if (flats.nonEmpty) {
-        writePage(JetMdbWrite.tdefPage(ccSchema, ccCodes, flats.size,
-          system = true))
-        ccDataPages.foreach(writePage)
-      }
-      flats.foreach { case (ci, _, _, head) =>
-        val flatBlobs = parts.iterator.flatMap { m =>
-          m.complex.get(ci) match {
-            case Some((fname, n)) if n > 0 =>
-              JetMdbBlobIO.readBlobs(fs, new Path(staging, fname))
-            case _ => Iterator.empty
-          }
-        }
-        JetMdbPagePacker.pack(flatBlobs, head).foreach(writePage)
-      }
-      val blobIter = parts.iterator.flatMap { m =>
-        JetMdbBlobIO.readBlobs(fs, new Path(staging, m.file))
-      }
-      JetMdbPagePacker.pack(blobIter, 4).foreach(writePage)
+    // pages 0-1: header + usage placeholder (ACE: its magic +
+    // version 0x02 — everything past page 0 is the Jet4 layout)
+    val hdr = new Array[Byte](layout.pageSize)
+    hdr(0) = 0x00; hdr(1) = 0x01
+    val magic = (if (ace) MagicAce else Magic)
+      .getBytes(StandardCharsets.US_ASCII)
+    System.arraycopy(magic, 0, hdr, 4, magic.length)
+    hdr(0x14) = (if (ace) 0x02 else layout.versionByte).toByte
+    writePage(hdr)
+    val usage = new Array[Byte](layout.pageSize)
+    usage(0) = 0x05; usage(1) = 0x01
+    writePage(usage)
+    // pages 2-3: catalog (MSysObjects at page 2; user TDEF at 4;
+    // MSysRelationships TDEF at 5 when relationships were declared)
+    import org.apache.spark.sql.catalyst.{InternalRow => IRow}
+    import org.apache.spark.unsafe.types.UTF8String
+    writePage(JetMdbWrite.tdefPage(layout, SysSchema, SysCodes, 2,
+      system = true))
+    // page 4: user TDEF head (wide schemas chain continuation
+    // pages right behind it — r12), so the rel TDEF page number
+    // must be computed from the chain length BEFORE the catalog
+    // row that names it is written
+    val userTdef = JetMdbWrite.tdefPages(layout, schema, codes,
+      math.min(numRows, Int.MaxValue.toLong).toInt, system = false,
+      indexes, autoNumbers, headPage = 4)
+    val relTdefPage = 4 + userTdef.length
+    // relationships data pages materialize up front (catalog-sized)
+    // so every later TDEF page number is known before the catalog
+    // page is written
+    val relDataPages =
+      if (relationships.isEmpty) Nil
+      else pack(relRowBytes().iterator, relTdefPage).toSeq
+    // ACE COMPLEX columns (r13): one hidden flat table per complex
+    // column (TDEF chain + data pages owned by its head), then the
+    // MSysComplexColumns catalog table linking (main TDEF page 4,
+    // column ordinal) → flat head — exactly what the reader's
+    // resolveComplex walk expects
+    val complexCols = codes.indices.filter(
+      codes(_) == JetMdbFormat.T_COMPLEX)
+    var cursor = relTdefPage +
+      (if (relationships.isEmpty) 0 else 1 + relDataPages.size)
+    val flats = complexCols.map { ci =>
+      val (fname, fschema, fcodes) =
+        JetMdbWrite.complexFlatSpec(table, schema(ci), ace)
+      val nFlat = parts.map(
+        _.complex.get(ci).map(_._2).getOrElse(0L)).sum
+      val pages = JetMdbWrite.tdefPages(layout, fschema, fcodes,
+        math.min(nFlat, Int.MaxValue.toLong).toInt, system = true,
+        Nil, Set("pk"), headPage = cursor)
+      val head = cursor
+      cursor += pages.length
+      (ci, fname, pages, head)
     }
+    val ccTdefPage = cursor
+    val ccSchema = StructType(Seq(
+      StructField("ConceptualTableID", IntegerType),
+      StructField("ColumnID", IntegerType),
+      StructField("FlatTableID", IntegerType),
+      StructField("ComplexTypeObjectID", IntegerType)))
+    val ccCodes = Array(T_LONG, T_LONG, T_LONG, T_LONG)
+    val ccDataPages =
+      if (flats.isEmpty) Nil
+      else pack(flats.map { case (ci, _, _, head) =>
+        JetMdbWrite.encodeRow(layout, IRow(4, ci, head, 0), ccSchema,
+          ccCodes)
+      }.iterator, ccTdefPage).toSeq
+    val catRows = (Seq(
+      IRow(2, 3.toShort, UTF8String.fromString("MSysObjects")),
+      IRow(4, 1.toShort, UTF8String.fromString(table))) ++
+      (if (relationships.nonEmpty)
+        Seq(IRow(relTdefPage, 3.toShort,
+          UTF8String.fromString("MSysRelationships")))
+      else Nil) ++
+      flats.map { case (_, fname, _, head) =>
+        IRow(head, 3.toShort, UTF8String.fromString(fname))
+      } ++
+      (if (flats.nonEmpty)
+        Seq(IRow(ccTdefPage, 3.toShort,
+          UTF8String.fromString("MSysComplexColumns")))
+      else Nil))
+      .map(JetMdbWrite.encodeRow(layout, _, SysSchema, SysCodes))
+    val catPages = pack(catRows.iterator, 2).toSeq
+    require(catPages.size == 1,
+      s"${layout.prefix}: catalog must fit one page")
+    catPages.foreach(writePage)
+    // user TDEF chain, then — if declared — the MSysRelationships
+    // TDEF + data, then the complex flat TDEFs + MSysComplexColumns
+    // + flat data, then the user data pages (owner = 4, the chain
+    // HEAD). Owners make page order irrelevant to the extent walk.
+    userTdef.foreach(writePage)
+    if (relationships.nonEmpty) {
+      writePage(JetMdbWrite.tdefPage(layout, relSchema, relCodes,
+        relationships.size, system = true))
+      relDataPages.foreach(writePage)
+    }
+    flats.foreach { case (_, _, pages, _) => pages.foreach(writePage) }
+    if (flats.nonEmpty) {
+      writePage(JetMdbWrite.tdefPage(layout, ccSchema, ccCodes,
+        flats.size, system = true))
+      ccDataPages.foreach(writePage)
+    }
+    flats.foreach { case (ci, _, _, head) =>
+      val flatBlobs = parts.iterator.flatMap { m =>
+        m.complex.get(ci) match {
+          case Some((fname, n)) if n > 0 =>
+            JetMdbBlobIO.readBlobs(fs, new Path(staging, fname))
+          case _ => Iterator.empty
+        }
+      }
+      pack(flatBlobs, head).foreach(writePage)
+    }
+    val blobIter = parts.iterator.flatMap { m =>
+      JetMdbBlobIO.readBlobs(fs, new Path(staging, m.file))
+    }
+    pack(blobIter, 4).foreach(writePage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -1048,34 +1021,36 @@ private[jetmdb] final case class JetMdbBatchWrite(
   }
 }
 
-/** Greedy packer: encoded rows → data pages owned by `tdefPage`
-  * (same fit rule the reader's extent walk implies). */
+/** Greedy packer: encoded rows → data pages of layout `l` owned by
+  * `tdefPage` (same fit rule the reader's extent walk implies): owner
+  * u32 @4, free space u16 @2, the layout's row count and offsets. */
 private[jetmdb] object JetMdbPagePacker {
   def pack(
-      rows: Iterator[Array[Byte]], tdefPage: Int): Iterator[Array[Byte]] =
+      l: JetLayout, rows: Iterator[Array[Byte]],
+      tdefPage: Int): Iterator[Array[Byte]] =
     new Iterator[Array[Byte]] {
       private val it = rows.buffered
       override def hasNext: Boolean = it.hasNext
       override def next(): Array[Byte] = {
-        val p = new Array[Byte](PageSize)
+        val p = new Array[Byte](l.pageSize)
         val b = ByteBuffer.wrap(p).order(ByteOrder.LITTLE_ENDIAN)
         p(0) = 0x01; p(1) = 0x01
         b.putInt(4, tdefPage)
-        var dataTop = PageSize
+        var dataTop = l.pageSize
         var n = 0
         var fits = true
         while (it.hasNext && fits) {
           val r = it.head
-          if (14 + 2 * (n + 1) <= dataTop - r.length) {
+          if (l.rowDirOff + 2 * (n + 1) <= dataTop - r.length) {
             it.next()
             dataTop -= r.length
             System.arraycopy(r, 0, p, dataTop, r.length)
-            b.putShort(14 + 2 * n, dataTop.toShort)
+            b.putShort(l.rowDirOff + 2 * n, dataTop.toShort)
             n += 1
           } else fits = false
         }
-        b.putShort(12, n.toShort)
-        b.putShort(2, (dataTop - (14 + 2 * n)).toShort)
+        b.putShort(l.rowCountOff, n.toShort)
+        b.putShort(2, (dataTop - (l.rowDirOff + 2 * n)).toShort)
         p
       }
     }
@@ -1118,25 +1093,23 @@ private[jetmdb] final case class JetMdbWriterFactory(
     path: String,
     stagingName: String,
     schema: StructType,
-    memoCols: Set[String],
-    datextCols: Set[String],
-    jet3: Boolean,
+    codes: Array[Int],
+    layout: JetLayout,
     ace: Boolean,
     conf: SerializableConfiguration) extends DataWriterFactory {
 
   override def createWriter(
       partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new JetMdbDataWriter(path, stagingName, schema, memoCols,
-      datextCols, jet3, ace, conf.value, partitionId, taskId)
+    new JetMdbDataWriter(path, stagingName, schema, codes, layout, ace,
+      conf.value, partitionId, taskId)
 }
 
 private[jetmdb] final class JetMdbDataWriter(
     path: String,
     stagingName: String,
     schema: StructType,
-    memoCols: Set[String],
-    datextCols: Set[String],
-    jet3: Boolean,
+    codes: Array[Int],
+    layout: JetLayout,
     ace: Boolean,
     hconf: Configuration,
     partitionId: Int,
@@ -1147,10 +1120,6 @@ private[jetmdb] final class JetMdbDataWriter(
   private val part = new Path(new Path(parent, stagingName), fileName)
   private val fs = part.getFileSystem(hconf)
   private val out = fs.create(part, true)
-  private val codes =
-    if (jet3) schema.fields.map(Jet3Write.jetCode3)
-    else schema.fields.map(
-      JetMdbWrite.jetCode(_, memoCols, ace, datextCols))
 
   // ACE COMPLEX columns (r13): each complex column stages its flat
   // rows in a sibling blob file; the main row is encoded with the
@@ -1204,9 +1173,8 @@ private[jetmdb] final class JetMdbDataWriter(
 
   override def write(row: InternalRow): Unit = {
     val bytes =
-      if (jet3) Jet3Write.encodeRow3(row, schema, codes)
-      else if (complexIdx.isEmpty)
-        JetMdbWrite.encodeRow(row, schema, codes)
+      if (complexIdx.isEmpty)
+        JetMdbWrite.encodeRow(layout, row, schema, codes)
       else {
         require(keyCounter < (1 << 20),
           "jetmdb: complex write caps at 2^20 rows per partition " +
@@ -1286,7 +1254,7 @@ private[jetmdb] final class JetMdbDataWriter(
                     j += 1
                   }
                 }
-                writeBlob(fout, JetMdbWrite.encodeRow(
+                writeBlob(fout, JetMdbWrite.encodeRow(layout,
                   new org.apache.spark.sql.catalyst.expressions
                     .GenericInternalRow(fvals), fschema, fcodes))
                 flatCounts(i) += 1
@@ -1296,7 +1264,7 @@ private[jetmdb] final class JetMdbDataWriter(
             }
           i += 1
         }
-        JetMdbWrite.encodeRow(
+        JetMdbWrite.encodeRow(layout,
           new org.apache.spark.sql.catalyst.expressions
             .GenericInternalRow(vals), schema, codes)
       }

@@ -78,9 +78,9 @@ final case class PlanAudit(
 
 object PlanAudit {
 
-  /** Audit the STATIC physical plan (AQE disabled during planning so
+  /** The STATIC physical plan of `df`: planned with AQE disabled so
     * exchanges and join strategies are visible, not wrapped in opaque
-    * query stages), then restore the session's earlier AQE setting.
+    * query stages, then the session's earlier AQE setting restored.
     *
     * Always RE-PLANS from the logical plan: `executedPlan` is a
     * memoized lazy val, so on a DataFrame that has already run an
@@ -88,14 +88,16 @@ object PlanAudit {
     * under which every collect is empty — a cartesian query would
     * audit clean. The fresh execution makes the AQE toggle actually
     * apply regardless of the DataFrame's history. */
-  def of(df: DataFrame): PlanAudit = {
+  def staticPlan(df: DataFrame): SparkPlan = {
     val spark = df.sparkSession
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try audit(
-      org.apache.spark.sql.graft.ColumnBridge.freshExecutedPlan(df))
+    try org.apache.spark.sql.graft.ColumnBridge.freshExecutedPlan(df)
     finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
+
+  /** Audit the [[staticPlan]] of `df`. */
+  def of(df: DataFrame): PlanAudit = audit(staticPlan(df))
 
   private[tools] def audit(plan: SparkPlan): PlanAudit = {
     def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] =

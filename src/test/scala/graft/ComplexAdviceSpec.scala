@@ -65,8 +65,9 @@ class ComplexAdviceSpec extends AnyFunSuite {
     val h = new Path(path).getFileSystem(new Configuration())
     val in = h.open(new Path(path))
     try {
+      val l = JetLayout.Jet4
       val flatT =
-        parseTdefChained(flatPage, JetMdbSource.readPage(in, _, PageSize))
+        parseTdefChained(l, flatPage, JetMdbSource.readPage(in, _, l.pageSize))
       val pkIdx = flatT.columns.indexWhere(_.autoNumber)
       val fkIdx = flatT.columns.indexWhere(_.typeCode == T_COMPLEX)
       assert(pkIdx >= 0 && fkIdx >= 0)
@@ -74,16 +75,16 @@ class ComplexAdviceSpec extends AnyFunSuite {
       var lvalPage: Array[Byte] = null
       val lval: Int => Array[Byte] = { n =>
         if (n != lvalNum) {
-          lvalPage = JetMdbSource.readPage(in, n, PageSize); lvalNum = n
+          lvalPage = JetMdbSource.readPage(in, n, l.pageSize); lvalNum = n
         }
         lvalPage
       }
       val pks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
       var pn = 1
       while (pn < pageCount) {
-        val page = JetMdbSource.readPage(in, pn, PageSize)
-        dataRowExtents(page, flatPage).foreach { case (s0, e0) =>
-          val r = decodeRow(page, s0, e0, flatT, lval)
+        val page = JetMdbSource.readPage(in, pn, l.pageSize)
+        dataRowExtents(l, page, flatPage).foreach { case (s0, e0) =>
+          val r = decodeRow(l, page, s0, e0, flatT, lval)
           if (r(fkIdx) != null)
             pks += ((r(fkIdx).asInstanceOf[Integer].intValue(),
               r(pkIdx).asInstanceOf[Integer].intValue()))

@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Test-side Jet3 (Access 97) `.mdb` fixture writer — the independent
   * byte-layout sibling of [[JetMdbFixture]], emitting the SAME
-  * documented profile `graft.sources.jetmdb.Jet3Format` parses
+  * documented profile the production reader parses (`JetLayout.Jet3`)
   * (2048-byte pages, version byte 0x00, 18-byte column descriptors,
   * u8-length CP1252 names, u8 row column count and var offsets) while
   * sharing no code with the production reader: a shared

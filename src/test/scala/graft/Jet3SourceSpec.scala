@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.jetmdb.{Jet3Format, JetMdbSource}
+import graft.sources.jetmdb.{JetLayout, JetMdbFormat, JetMdbSource}
 
 /** Jet3 (Access 97) read support: fixtures written by the independent
   * test-side layout writer ([[Jet3Fixture]]), decoded by the
@@ -174,13 +174,13 @@ class Jet3SourceSpec extends AnyFunSuite {
   test("jet3 rejections: out-of-profile column types name the " +
     "jetcsv escape route (narrowed to GUID/NUMERIC in r12)") {
     for (code <- Seq(0x0F, 0x10)) { // GUID, NUMERIC
-      val page = new Array[Byte](Jet3Format.PageSize)
+      val page = new Array[Byte](JetLayout.Jet3.pageSize)
       page(0) = 0x02; page(1) = 0x01
       // num_cols = 1 @25, no indexes; one descriptor @43
       page(25) = 1
       page(43) = code.toByte
       val e = intercept[UnsupportedOperationException] {
-        Jet3Format.parseTdef(page, 7)
+        JetMdbFormat.parseTdefChained(JetLayout.Jet3, 7, Map(7 -> page))
       }
       assert(e.getMessage.contains("jetcsv"), e.getMessage)
     }
@@ -222,12 +222,12 @@ class Jet3SourceSpec extends AnyFunSuite {
   }
 
   test("jet3 rejects oversized rows (u8-offset profile) honestly") {
-    val tdef = graft.sources.jetmdb.JetMdbFormat.JetTableDef(
-      5, 1, 0x4e, Seq(graft.sources.jetmdb.JetMdbFormat.JetColumn(
+    val tdef = JetMdbFormat.JetTableDef(
+      5, 1, 0x4e, Seq(JetMdbFormat.JetColumn(
         "x", 0x0A, 0, fixed = false, 0, 0, 0)))
-    val page = new Array[Byte](Jet3Format.PageSize)
+    val page = new Array[Byte](JetLayout.Jet3.pageSize)
     val e = intercept[UnsupportedOperationException] {
-      Jet3Format.decodeRow(page, 100, 400, tdef)
+      JetMdbFormat.decodeRow(JetLayout.Jet3, page, 100, 400, tdef)
     }
     assert(e.getMessage.contains("jump-table"), e.getMessage)
   }
@@ -248,5 +248,11 @@ class Jet3SourceSpec extends AnyFunSuite {
       .option("table", "t").load(p).collect()(0).getInt(0)
     assert(one(p3) == 30)
     assert(one(p4) == 40)
+    // the two files differ only in the layout one function sniffs
+    def layoutOf(p: String): JetLayout = JetLayout.of(
+      Files.readAllBytes(java.nio.file.Paths.get(p))
+        .take(JetLayout.HeaderBytes))
+    assert(layoutOf(p3) == JetLayout.Jet3)
+    assert(layoutOf(p4) == JetLayout.Jet4)
   }
 }

@@ -50,7 +50,8 @@ class Jet3WriteSpec extends AnyFunSuite {
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(written))
     assert(bytes.length % 2048 == 0)
     assert(bytes(0x14) == 0x00)
-    assert(graft.sources.jetmdb.Jet3Format.isJet3(bytes.take(2048)))
+    assert(graft.sources.jetmdb.JetLayout.of(bytes.take(2048)) ==
+      graft.sources.jetmdb.JetLayout.Jet3)
     // value round-trip through the production reader (auto-dispatch)
     val back = spark.read.format("jetmdb").option("table", "t")
       .load(written)
@@ -158,8 +159,9 @@ class Jet3WriteSpec extends AnyFunSuite {
       Seq("Customers 97" -> t1, "Orders 97" -> t2), mdb,
       version = "jet3")
     // the exported file IS Access 97
-    assert(graft.sources.jetmdb.Jet3Format.isJet3(
-      Files.readAllBytes(java.nio.file.Paths.get(mdb)).take(2048)))
+    assert(graft.sources.jetmdb.JetLayout.of(
+      Files.readAllBytes(java.nio.file.Paths.get(mdb)).take(2048)) ==
+      graft.sources.jetmdb.JetLayout.Jet3)
     // …and the whole-database migration path consumes it end-to-end
     // (catalog walk, typed specs, binary read, Derby load) — the
     // lifecycle a real Access-97 archive goes through

@@ -6,7 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.jetmdb.JetMdbFormat
+import graft.sources.jetmdb.{JetLayout, JetMdbFormat}
 
 /** Regression pins for the round-6 review findings: pushed-filter
   * false drops on Decimal/Timestamp, the U+FEFF/compression-marker
@@ -62,19 +62,19 @@ class JetHardeningSpec extends AnyFunSuite {
   }
 
   test("overflow rows (flag 0x4000) are rejected, not silently dropped") {
-    val page = new Array[Byte](JetMdbFormat.PageSize)
+    val page = new Array[Byte](JetLayout.Jet4.pageSize)
     val b = ByteBuffer.wrap(page).order(ByteOrder.LITTLE_ENDIAN)
     page(0) = 0x01
     b.putInt(4, 42) // owner tdef page
     b.putShort(12, 1.toShort) // one row
     b.putShort(14, (0x4000 | 100).toShort) // overflow flag + offset
     val e = intercept[IllegalArgumentException] {
-      JetMdbFormat.dataRowExtents(page, 42)
+      JetMdbFormat.dataRowExtents(JetLayout.Jet4, page, 42)
     }
     assert(e.getMessage.contains("overflow"))
     // deleted rows still skip silently (they are genuinely gone)
     b.putShort(14, (0x8000 | 100).toShort)
-    assert(JetMdbFormat.dataRowExtents(page, 42).isEmpty)
+    assert(JetMdbFormat.dataRowExtents(JetLayout.Jet4, page, 42).isEmpty)
   }
 
   test("truncated double-byte run in compressed text is rejected, " +
@@ -115,7 +115,7 @@ class JetHardeningSpec extends AnyFunSuite {
 
   test("decode-time pruning never touches a pruned LVAL column") {
     import graft.JetMdbFixture.{Col, Table}
-    import graft.sources.jetmdb.{JetMdbFormat, JetMdbSource}
+    import graft.sources.jetmdb.JetMdbSource
     val path = Files.createTempDirectory("jet-prune")
       .resolve("db.mdb").toString
     val longText = "memo payload " * 150 // forces the LVAL form
@@ -127,24 +127,25 @@ class JetHardeningSpec extends AnyFunSuite {
     val (tdef, _, count) = JetMdbSource.tableDef(path, "docs")
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path))
-    val pages = bytes.grouped(JetMdbFormat.PageSize).toArray
+    val l = JetLayout.Jet4
+    val pages = bytes.grouped(l.pageSize).toArray
     val dataPage = pages.indexWhere(p =>
       (p(0) & 0xff) == 0x01 && JetMdbFormat.i32(p, 4) == tdef.tdefPage)
     assert(dataPage > 0, "fixture data page not found")
     val (s0, e0) =
-      JetMdbFormat.dataRowExtents(pages(dataPage), tdef.tdefPage).head
+      JetMdbFormat.dataRowExtents(l, pages(dataPage), tdef.tdefPage).head
     val boom: Int => Array[Byte] =
       _ => throw new AssertionError("LVAL fetched for a pruned column")
     val wanted = tdef.columns.map(_.name == "k").toArray
     // pruned: the k column decodes, the memo slot is null, and the
     // LVAL fetcher is NEVER called
     val row = JetMdbFormat.decodeRow(
-      pages(dataPage), s0, e0, tdef, boom, wanted)
+      l, pages(dataPage), s0, e0, tdef, boom, wanted)
     assert(row(tdef.columns.indexWhere(_.name == "k")) != null)
     assert(row(tdef.columns.indexWhere(_.name == "body")) == null)
     // unpruned, the same row genuinely needs the fetcher
     intercept[AssertionError] {
-      JetMdbFormat.decodeRow(pages(dataPage), s0, e0, tdef, boom, null)
+      JetMdbFormat.decodeRow(l, pages(dataPage), s0, e0, tdef, boom, null)
     }
   }
 

@@ -337,10 +337,11 @@ class JetMdbSourceSpec extends AnyFunSuite {
       rows(20).isNullAt(3))
     // a long-value flag with no page fetcher → precise require, not a
     // garbage read (flags 0x00 with nonzero length forces the chain path)
-    val page = new Array[Byte](graft.sources.jetmdb.JetMdbFormat.PageSize)
+    val l = graft.sources.jetmdb.JetLayout.Jet4
+    val page = new Array[Byte](l.pageSize)
     page(0) = 1 // length 1, flags byte 0x00
     val e = intercept[IllegalArgumentException] {
-      graft.sources.jetmdb.JetMdbFormat.resolveMemo(page, 0, 12, null)
+      graft.sources.jetmdb.JetMdbFormat.resolveMemo(l, page, 0, 12, null)
     }
     assert(e.getMessage.contains("no page fetcher"))
   }
@@ -648,5 +649,73 @@ class JetMdbSourceSpec extends AnyFunSuite {
       .option("version", "ace").mode("overwrite").save(p3)
     assert(spark.read.format("jetmdb").option("table", "t").load(p3)
       .collect()(0).getLong(nCols - 1) == 1234567890123L)
+  }
+
+  test("jet4 and ace writer output is byte-identical to the independent " +
+    "fixture writer: every written Jet4 type, nulls, an inline memo, " +
+    "and the ace BIGINT / Date/Time Extended") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val day = 86400000000L
+    val leap = 1582934400000000L // 2020-02-29T00:00:00Z
+    // DATETIME values are whole days: the fixture's one-division OLE
+    // date and the writer's split day/fraction agree exactly on them
+    val jet4Schema = StructType(Seq(
+      StructField("flag", BooleanType), StructField("i", ShortType),
+      StructField("l", IntegerType),
+      StructField("price", DecimalType(19, 4)),
+      StructField("n", DecimalType(10, 2)), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("ts", TimestampType),
+      StructField("name", StringType), StructField("memo", StringType),
+      StructField("blob", BinaryType)))
+    val jet4Cols = Seq(Col("flag", 0x01), Col("i", 0x03),
+      Col("l", 0x04), Col("price", 0x05),
+      Col("n", 0x10, prec = 10, scale = 2), Col("f", 0x06),
+      Col("d", 0x07), Col("ts", 0x08), Col("name", 0x0A),
+      Col("memo", 0x0C), Col("blob", 0x0B))
+    // fixture values; epoch micros stand in for the timestamp columns
+    val jet4Rows: Seq[Seq[Any]] = Seq(
+      Seq(true, 3.toShort, 12, new java.math.BigDecimal("1.5000"),
+        new java.math.BigDecimal("-12.34"), 2.5f, 3.5, leap, "hello",
+        "inline memo wörld", Array[Byte](1, 2, 3, -1)),
+      Seq(false, null, null, null, null, null, null, null, null, null,
+        null),
+      Seq(true, -7.toShort, -99, new java.math.BigDecimal("-0.0001"),
+        new java.math.BigDecimal("0.00"), -1f, -1e-3, -10 * day, "",
+        "", Array.emptyByteArray))
+    def write(path: String, schema: StructType, rows: Seq[Seq[Any]],
+        tsCols: Set[Int], opts: (String, String)*): Unit = {
+      val sparkRows = rows.map(r => Row.fromSeq(r.zipWithIndex.map {
+        case (v: Long, i) if tsCols(i) => java.sql.Timestamp.from(
+          java.time.Instant.EPOCH.plusNanos(v * 1000))
+        case (v, _) => v
+      }))
+      spark.createDataFrame(java.util.Arrays.asList(sparkRows: _*), schema)
+        .coalesce(1).write.mode("overwrite").format("jetmdb")
+        .option("table", "t").option("memoColumns", "memo")
+        .options(opts.toMap).save(path)
+    }
+    def assertSameBytes(written: String, fixture: String): Unit = {
+      val a = Files.readAllBytes(java.nio.file.Paths.get(written))
+      val b = Files.readAllBytes(java.nio.file.Paths.get(fixture))
+      assert(a.length == b.length, s"sizes ${a.length} vs ${b.length}")
+      val diff = a.indices.find(i => a(i) != b(i))
+      assert(diff.isEmpty, s"first differing byte at $diff")
+    }
+    val (w4, f4) = (tmpMdb(), tmpMdb())
+    write(w4, jet4Schema, jet4Rows, Set(7))
+    JetMdbFixture.write(f4, Seq(Table("t", jet4Cols, jet4Rows)))
+    assertSameBytes(w4, f4)
+    // ACE: the same frame plus a Large Number and a Date/Time Extended
+    val aceRows = jet4Rows.zip(Seq(
+      Seq(1234567890123L, leap + 1234567L), Seq(null, null),
+      Seq(-1L, -day))).map { case (r, e) => r ++ e }
+    val (wa, fa) = (tmpMdb(), tmpMdb())
+    write(wa, jet4Schema.add("big", LongType).add("dx", TimestampType),
+      aceRows, Set(7, 12), "version" -> "ace", "datextColumns" -> "dx")
+    JetMdbFixture.write(fa, Seq(Table("t",
+      jet4Cols ++ Seq(Col("big", 0x13), Col("dx", 0x14)), aceRows)),
+      aceVersion = 2)
+    assertSameBytes(wa, fa)
   }
 }

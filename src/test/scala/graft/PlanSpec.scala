@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -10,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Physical-plan assertions (SURVEY.md §4): the optimizations that
   * matter at 100 TB must actually appear in the EXECUTED plan — filters
   * reaching the parquet scan, column pruning, broadcast joins for dims,
-  * true top-k, whole-stage codegen — not just be hoped for. Queries are
-  * executed first so AQE settles on its final plan. */
+  * true top-k, whole-stage codegen — not just be hoped for. Each plan
+  * is the static one `PlanAudit.staticPlan` re-plans with AQE off. */
 class PlanSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val spark = TestSpark.session
@@ -19,12 +18,8 @@ class PlanSpec extends AnyFunSuite {
   /** The static physical plan (AQE disabled for inspection — adaptive
     * wraps stages in opaque QueryStageExec leaves; the static plan is
     * what the pushdown/broadcast/codegen assertions are about). */
-  private def finalPlan(name: String): SparkPlan = {
-    val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def finalPlan(name: String): SparkPlan =
+    graft.tools.PlanAudit.staticPlan(SparkEntry.queries(name)(spark, sfDir))
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     p.collectWithSubqueries { case f: FileSourceScanExec => f }

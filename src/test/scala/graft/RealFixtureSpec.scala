@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.jetmdb.JetMdbFormat
+import graft.sources.jetmdb.{JetLayout, JetMdbFormat}
 
 /** Ready-to-fire validation hooks for REAL external fixtures the
   * offline container cannot ship (SURVEY §7 risks 7/8): the moment a
@@ -31,16 +31,13 @@ class RealFixtureSpec extends AnyFunSuite {
     val file = new java.io.File(path.get)
     assert(file.isFile, s"GRAFT_REAL_MDB=$path is not a file")
     // raw page-walk: header + catalog come from the format layer
-    // directly, independent of the DSv2 plumbing — version-dispatched
-    // exactly like the source layer
+    // directly, independent of the DSv2 plumbing — the layout sniffed
+    // exactly like the source layer sniffs it
     val raf = new java.io.RandomAccessFile(file, "r")
-    val head = new Array[Byte](graft.sources.jetmdb.Jet3Format.PageSize)
+    val head = new Array[Byte](JetLayout.HeaderBytes)
     raf.seek(0); raf.readFully(head)
-    JetMdbFormat.checkHeader(head)
-    val jet3 = graft.sources.jetmdb.Jet3Format.isJet3(head)
-    val pageSize =
-      if (jet3) graft.sources.jetmdb.Jet3Format.PageSize
-      else JetMdbFormat.PageSize
+    val layout = JetLayout.of(head)
+    val pageSize = layout.pageSize
     def page(n: Int): Array[Byte] = {
       val p = new Array[Byte](pageSize)
       raf.seek(n.toLong * pageSize)
@@ -49,10 +46,7 @@ class RealFixtureSpec extends AnyFunSuite {
     }
     try {
       val pageCount = (file.length() / pageSize).toInt
-      val cat =
-        if (jet3) graft.sources.jetmdb.Jet3Format
-          .readCatalog(pageCount, page)
-        else JetMdbFormat.readCatalog(pageCount, page)
+      val cat = JetMdbFormat.readCatalog(layout, pageCount, page)
       val userTables = cat.filterNot(_.isSystem)
       assert(userTables.nonEmpty,
         s"real .mdb has no user tables in MSysObjects")
@@ -65,9 +59,7 @@ class RealFixtureSpec extends AnyFunSuite {
         assert(df.schema.nonEmpty, s"table ${t.name}: empty schema")
         val viaDsv2 = df.count()
         val raw = (1 until pageCount).map { pn =>
-          (if (jet3) graft.sources.jetmdb.Jet3Format
-            .dataRowExtents(page(pn), t.tdefPage)
-          else JetMdbFormat.dataRowExtents(page(pn), t.tdefPage))
+          JetMdbFormat.dataRowExtents(layout, page(pn), t.tdefPage)
             .size.toLong
         }.sum
         assert(viaDsv2 == raw,

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TableLoader
+import graft.tools.PlanAudit
 
 /** Storage-layout levers for 100 TB (SURVEY.md §4.2/§7 note 7),
   * demonstrated end-to-end: bucketing makes the fact-fact join
@@ -16,12 +17,6 @@ import graft.sources.TableLoader
 class ScaleLayoutSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val spark = TestSpark.session
-
-  private def staticPlan(df: org.apache.spark.sql.DataFrame) = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
 
   test("bucketed fact-fact join runs without any shuffle exchange") {
     TableLoader.configure(spark)
@@ -47,7 +42,7 @@ class ScaleLayoutSpec extends AnyFunSuite {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
-      val shuffles = staticPlan(joined)
+      val shuffles = PlanAudit.staticPlan(joined)
         .collect { case e: ShuffleExchangeExec => e }
       // the join itself must be exchange-free: only the tiny
       // post-aggregation exchange may remain
@@ -79,7 +74,7 @@ class ScaleLayoutSpec extends AnyFunSuite {
     val joined = fact
       .join(broadcast(dim), col("o_year") === col("d_year"))
       .groupBy(col("d_tag")).agg(count(lit(1)).as("n"))
-    val scan = staticPlan(joined)
+    val scan = PlanAudit.staticPlan(joined)
       .collectWithSubqueries { case f: FileSourceScanExec => f }
       .find(_.metadata.get("Location").exists(_.contains("orders_part")))
       .get

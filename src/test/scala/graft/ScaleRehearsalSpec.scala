@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
@@ -149,12 +148,6 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     d
   }
 
-  private def staticPlan(df: DataFrame) = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
   test("10x corpus generates with the planted structure", SlowTag) {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     assert(docs.count() == nBase + nNear + nBorrow)
@@ -188,7 +181,7 @@ class ScaleRehearsalSpec extends AnyFunSuite {
   test("substring family at 10x: planted borrowed spans all found; " +
     "gram index never broadcast, never cartesian", SlowTag) {
     val q = SparkEntry.queries("q_dedup_substring")(spark, dir)
-    val plan = staticPlan(q)
+    val plan = graft.tools.PlanAudit.staticPlan(q)
     assert(plan.collectWithSubqueries {
       case b: BroadcastExchangeExec => b
     }.isEmpty, "substring pipeline broadcasts at 10x — the gram index " +

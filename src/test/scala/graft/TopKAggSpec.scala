@@ -54,10 +54,7 @@ class TopKAggSpec extends AnyFunSuite {
   test("q_agg_topk partial-aggregates map-side (no full partition sort)") {
     val df = SparkEntry.queries("q_agg_topk")(spark,
       "/root/testdata/sf0.001")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try df.queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val plan = graft.tools.PlanAudit.staticPlan(df).toString
     assert(plan.contains("ObjectHashAggregate"), plan.take(800))
     assert(plan.contains("partial_"),
       "heap must build map-side before the shuffle")
